@@ -37,6 +37,43 @@ def test_simhash_combo_scheme_equals_bruteforce(docs, corpus_texts):
     assert got == exp
 
 
+def test_simhash_bands_match_python_reference(spark):
+    """The band index equals a pure-Python block split for both schemes,
+    sign-bit fingerprints included (the shifts must be unsigned)."""
+    import random
+    from itertools import combinations
+
+    rng = random.Random(7)
+    fps = [0, -1, -(1 << 63), (1 << 63) - 1, 0x0123456789ABCDEF,
+           -0x0123456789ABCDEF] + [rng.getrandbits(64) - (1 << 63)
+                                   for _ in range(200)]
+    sigs = spark.createDataFrame(list(enumerate(fps)), "id long, simhash long")
+    w = CFG.simhash_bits // CFG.simhash_bands
+
+    def blocks(fp):
+        u = fp & ((1 << 64) - 1)
+        return [(u >> (i * w)) & ((1 << w) - 1)
+                for i in range(CFG.simhash_bands)]
+
+    keep = CFG.simhash_bands - CFG.hamming_threshold
+    for scheme in ("single", "combo"):
+        exp = set()
+        for i, fp in enumerate(fps):
+            b = blocks(fp)
+            if scheme == "single":
+                keys = b
+            else:
+                keys = [sum(b[bi] << (j * w) for j, bi in enumerate(c))
+                        for c in combinations(range(CFG.simhash_bands), keep)]
+            exp |= {(i, fp, t, k) for t, k in enumerate(keys)}
+        bands = simhash_lsh.simhash_bands(sigs, CFG, scheme)
+        assert bands.dtypes == [("id", "bigint"), ("simhash", "bigint"),
+                                ("table_id", "int"), ("band_key", "bigint")]
+        got = bands.collect()
+        assert len(got) == len(exp)
+        assert set(map(tuple, got)) == exp, scheme
+
+
 def test_jaccard_all_pairs_equals_bruteforce(docs, corpus_texts):
     got = _pairset(jaccard.jaccard_all_pairs(
         docs, cfg=CFG, threshold=CFG.jaccard_threshold))

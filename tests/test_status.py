@@ -48,6 +48,27 @@ def test_status_complete(finished_dir):
     assert st["next_stage"] is None
 
 
+def test_metrics_rows_per_stage_and_written_file(finished_dir):
+    """A finished run records one metrics row per stage and one lineage row
+    per data file of each stage table, matching the footers status reads."""
+    import pyarrow.parquet as pq
+
+    from webdedup.plans import checkpoint
+
+    st = status(finished_dir)
+    stages = pq.read_table(os.path.join(
+        finished_dir, "metrics_stages.parquet")).column("stage").to_pylist()
+    assert sorted(stages) == sorted(st["stages_committed"])
+    lineage = pq.read_table(os.path.join(
+        finished_dir, "metrics_partitions.parquet")).to_pylist()
+    for name in stages:
+        got = sorted((r["partition_id"], r["n_rows"]) for r in lineage
+                     if r["stage"] == name)
+        counts = checkpoint.file_row_counts(finished_dir, name)
+        assert got == list(enumerate(counts)), name
+        assert sum(counts) == st["tables"][name]["rows"]
+
+
 def test_status_half_resumed(finished_dir):
     """Simulate a mid-run kill: assignments' commit marker gone and every
     later stage absent — exactly the state pipeline.run(resume=True)

@@ -52,9 +52,9 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
                      simhash64_col(F.col(text_col)).alias("simhash"))
 
 
-def _block(sig, i: int, width: int):
-    """Unsigned extraction of block i (low-to-high) of `width` bits."""
-    return F.shiftrightunsigned(sig, i * width).bitwiseAND(F.lit((1 << width) - 1))
+def _block(i: int, width: int) -> str:
+    """SQL for the unsigned block i (low-to-high) of `width` bits."""
+    return f"(shiftrightunsigned(`simhash`, {i * width}) & {(1 << width) - 1})"
 
 
 def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT,
@@ -72,23 +72,20 @@ def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT,
     from webdedup.plans.partitions import ensure_min_partitions
     sigs = ensure_min_partitions(sigs)
     width = cfg.simhash_bits // cfg.simhash_bands
-    blocks = [_block(F.col("simhash"), i, width) for i in range(cfg.simhash_bands)]
     if scheme == "single":
-        keys = [(t, blocks[t]) for t in range(cfg.simhash_bands)]
+        keys = [_block(t, width) for t in range(cfg.simhash_bands)]
     elif scheme == "combo":
         n_keep = cfg.simhash_bands - cfg.hamming_threshold  # 3 blocks kept
-        keys = []
-        for t, combo in enumerate(combinations(range(cfg.simhash_bands), n_keep)):
-            key = F.lit(0).cast("long")
-            for j, bi in enumerate(combo):
-                key = key.bitwiseOR(F.shiftleft(blocks[bi], j * width))
-            keys.append((t, key))
+        keys = [" | ".join(f"shiftleft({_block(bi, width)}, {j * width})"
+                           for j, bi in enumerate(combo))
+                for combo in combinations(range(cfg.simhash_bands), n_keep)]
     else:
         raise ValueError(scheme)
-    pairs = F.array(*[
-        F.struct(F.lit(t).alias("table_id"), k.cast("long").alias("band_key"))
-        for t, k in keys
-    ])
+    # one SQL expression instead of a Column tree: building the 56-table
+    # combo index from Column calls costs ~850 py4j round trips per call
+    pairs = F.expr("array(" + ", ".join(
+        f"named_struct('table_id', {t}, 'band_key', CAST({k} AS BIGINT))"
+        for t, k in enumerate(keys)) + ")")
     return (
         sigs.select("id", "simhash", F.explode(pairs).alias("tb"))
         .select("id", "simhash", "tb.table_id", "tb.band_key")

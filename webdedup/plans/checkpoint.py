@@ -4,6 +4,10 @@ Stand-in for Iceberg snapshots (no Iceberg runtime in the sandbox): a stage
 table is "committed" iff Spark's ``_SUCCESS`` marker exists, which Spark
 writes only after all tasks commit — so a killed job never half-resumes.
 Resume-from-checkpoint (north_rule) = ``exists() ? read : compute+write``.
+
+``work_dir`` must be storage the driver can see as a POSIX path: the
+commit marker and the footer row counts are read with ``os`` and pyarrow on
+the driver, never through a Spark job.
 """
 
 from __future__ import annotations
@@ -31,16 +35,22 @@ def read(spark: SparkSession, work_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(work_dir, name))
 
 
-def row_count(work_dir: str, name: str) -> int:
-    """Row count from parquet footers — no Spark job."""
+def file_row_counts(work_dir: str, name: str) -> list[int]:
+    """Row count of each data file of a table, in file-name order (for a
+    Spark-written table, the order of the write tasks), from the parquet
+    footers — no Spark job.  Hidden (``.``/``_``) files are skipped, as
+    Spark's reader skips them."""
     import pyarrow.parquet as pq
 
     path = table_path(work_dir, name)
-    total = 0
-    for f in os.listdir(path):
-        if f.endswith(".parquet"):
-            total += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-    return total
+    return [pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+            for f in sorted(os.listdir(path))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))]
+
+
+def row_count(work_dir: str, name: str) -> int:
+    """Row count from parquet footers — no Spark job."""
+    return sum(file_row_counts(work_dir, name))
 
 
 def materialize(df: DataFrame, work_dir: str, name: str,
@@ -51,10 +61,13 @@ def materialize(df: DataFrame, work_dir: str, name: str,
     Returns a DataFrame backed by the stage table either way, so downstream
     stages read a stable, shuffle-free scan instead of recomputing lineage.
     ``partitions`` controls the written file count (one read partition per
-    file for small tables — keeps downstream parallelism up).
+    file for small tables — keeps downstream parallelism up).  A table this
+    call wrote is read back with the schema it was written with: parquet
+    schema inference costs a Spark job per read.  A resumed table is
+    inferred from its files.
     """
     spark = df.sparkSession
     if resume and exists(work_dir, name):
         return read(spark, work_dir, name)
     write(df, work_dir, name, partitions=partitions)
-    return read(spark, work_dir, name)
+    return spark.read.schema(df.schema).parquet(table_path(work_dir, name))

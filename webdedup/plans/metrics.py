@@ -4,32 +4,59 @@ timing harness ``run_pipeline.py:83-126`` and ``evaluator.py:68-83``).
 
 Two granularities:
 
-- stage metrics: one row per pipeline stage (rows, partitions, wall sec);
-- partition lineage: one row per (stage, partition) with row counts, via a
-  single ``groupBy(spark_partition_id())`` — cheap, no extra shuffle of the
-  data itself, and enough to localize skew ("partition 17 has 40% of rows")
-  and to audit resumed runs.
+- stage metrics: one row per pipeline stage (rows, wall sec, memory);
+- partition lineage: one row per written file of the stage table, with its
+  row count read from the parquet footer — enough to localize skew
+  ("file 17 holds 40% of the rows") and to audit resumed runs.
+
+Both are bookkeeping, not dedup work, so neither runs a Spark job: rows are
+built on the driver and written with pyarrow, one file per append, into the
+same ``<table>.parquet/`` directories Spark reads (``read_stage_metrics``)
+and ``tools/status.py`` reads without a session.  Each append writes a
+``.``-prefixed temp file and renames it into place, so a reader never sees a
+partial file and a killed run keeps the rows of its finished stages.  Like
+``plans.checkpoint``, this assumes ``work_dir`` is driver-visible POSIX
+storage.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from webdedup.plans import checkpoint
 
 STAGE_METRICS_TABLE = "metrics_stages"
 PARTITION_LINEAGE_TABLE = "metrics_partitions"
 
+# the column types Spark wrote these tables with before they moved to
+# pyarrow, nullability included, so old and new files read as one table
+STAGE_METRICS_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("n_rows", pa.int64()),
+    ("wall_sec", pa.float64()), ("peak_rss_mb", pa.float64()),
+    ("jvm_heap_mb", pa.float64()), ("ts", pa.string()),
+    ("extra", pa.string()),
+])
+PARTITION_LINEAGE_SCHEMA = pa.schema([
+    pa.field("stage", pa.string(), nullable=False),
+    pa.field("partition_id", pa.int32(), nullable=False),
+    pa.field("n_rows", pa.int64(), nullable=False),
+])
 
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("stage", F.lit(stage))
-        .select("stage", "partition_id", "n_rows")
-    )
+
+def _append(work_dir: str, table: str, rows: pa.Table) -> None:
+    """Add ``rows`` to ``table`` as one new file, atomically."""
+    path = checkpoint.table_path(work_dir, table)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}")
+    pq.write_table(rows, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def peak_memory_mb(spark: SparkSession) -> tuple[float, float]:
@@ -61,23 +88,21 @@ def append_stage_metrics(spark: SparkSession, work_dir: str, stage: str,
         "ts": _dt.datetime.now(_dt.timezone.utc).isoformat(),
         "extra": str(extra or {}),
     }
-    df = spark.createDataFrame(
-        [tuple(row.values())],
-        schema="stage string, n_rows long, wall_sec double, "
-               "peak_rss_mb double, jvm_heap_mb double, ts string, extra string"
-    )
-    df.coalesce(1).write.mode("append").parquet(
-        os.path.join(work_dir, f"{STAGE_METRICS_TABLE}.parquet")
-    )
+    _append(work_dir, STAGE_METRICS_TABLE,
+            pa.Table.from_pylist([row], schema=STAGE_METRICS_SCHEMA))
 
 
-def append_partition_lineage(df: DataFrame, work_dir: str, stage: str) -> None:
-    partition_lineage(df, stage).coalesce(1).write.mode("append").parquet(
-        os.path.join(work_dir, f"{PARTITION_LINEAGE_TABLE}.parquet")
-    )
+def append_partition_lineage(work_dir: str, stage: str) -> None:
+    """One row per data file of the committed stage table ``stage``;
+    ``partition_id`` is the file's position in name order."""
+    counts = checkpoint.file_row_counts(work_dir, stage)
+    _append(work_dir, PARTITION_LINEAGE_TABLE, pa.Table.from_pydict(
+        {"stage": [stage] * len(counts),
+         "partition_id": list(range(len(counts))),
+         "n_rows": counts},
+        schema=PARTITION_LINEAGE_SCHEMA))
 
 
 def read_stage_metrics(spark: SparkSession, work_dir: str) -> DataFrame:
     return spark.read.parquet(
-        os.path.join(work_dir, f"{STAGE_METRICS_TABLE}.parquet")
-    )
+        checkpoint.table_path(work_dir, STAGE_METRICS_TABLE))

@@ -129,7 +129,7 @@ def run(
         times[name], rows[name] = dt, n
         if record_metrics and not (resume and was_done):
             metrics.append_stage_metrics(spark, work_dir, name, n, dt)
-            metrics.append_partition_lineage(df, work_dir, name)
+            metrics.append_partition_lineage(work_dir, name)
         return df
 
     # 1. extract (reference stage: image decode + feature extract).
