@@ -90,14 +90,14 @@ def reset_memo() -> None:
 
 
 def _sigsets(s: SparkSession, d: str) -> DataFrame:
-    """Fused (id, minhash, shingles) stage frame — the in-memory analog of
-    the pipeline's signature/shingle stage tables (SURVEY S4-S6), shared by
-    the minhash and jaccard derived views (r7).  ONE tokenize+md5 pass
-    instead of one per consumer; values bit-identical to the individual
-    operators (signatures.minhash_shingle_sets)."""
-    from webdedup.functions.signatures import minhash_shingle_sets
-    return _memo(s, d, "sigsets",
-                 lambda: minhash_shingle_sets(_docs(s, d), CFG))
+    """(id, minhash, shingles) stage frame — the in-memory analog of the
+    pipeline's signature stage table (SURVEY S4-S6), shared by the minhash
+    and jaccard derived views (r7).  ONE pass of the signature kernel
+    (``kinds=("minhash", "shingles")``) instead of one per consumer; values
+    bit-identical to the individual operator views."""
+    from webdedup.functions.signatures import signature_view
+    return _memo(s, d, "sigsets", lambda: signature_view(
+        _docs(s, d), CFG, kinds=("minhash", "shingles")))
 
 
 def _mh_band_cands(s: SparkSession, d: str) -> DataFrame:

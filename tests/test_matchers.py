@@ -229,8 +229,7 @@ def test_minhash_est_prefilter_keeps_recall(docs, corpus_texts):
 def test_minhash_fast_accept_stratification(docs, corpus_texts):
     """fast_accept must only ADD pairs (est >= cutoff, skipping the exact
     verify) relative to the exact-verify edge set — never lose one."""
-    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold, skew_mode="salt",
-              est_prefilter=0.37)
+    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold, est_prefilter=0.37)
     base, _ = minhash_lsh.minhash_edges(docs, **kw)
     fast, _ = minhash_lsh.minhash_edges(docs, fast_accept=0.633, **kw)
     # exact mode has no flag column; fast-accept mode marks every row so
@@ -286,26 +285,6 @@ def test_ivf_cosine_recall(spark):
     assert full == exact_pairs
 
 
-def test_jaccard_verify_restrict_sets_equivalence(spark):
-    """restrict_sets=True/False must be result-identical (the flag is a
-    physical-plan choice: restricted single-scan vs corpus-wide sizes)."""
-    from webdedup.sources import corpus
-
-    docs = spark.createDataFrame(corpus.corpus_rows(CFG.seed + 7, 40),
-                                 schema=corpus.PAGE_KIND_SCHEMA)
-    docs = docs.select(F.xxhash64("url").alias("doc_id"), "text")
-    sets = jaccard.shingle_sets(docs, "doc_id", "text", CFG).localCheckpoint()
-    bands = minhash_lsh.minhash_bands(
-        minhash_lsh.minhash_signatures(docs, cfg=CFG).localCheckpoint(), CFG)
-    cands = minhash_lsh.minhash_candidates(bands)
-    base = {(r["a"], r["b"], r["jaccard"]) for r in jaccard.jaccard_verify(
-        cands, None, cfg=CFG, threshold=0.2, sets=sets).collect()}
-    restricted = {(r["a"], r["b"], r["jaccard"]) for r in jaccard.jaccard_verify(
-        cands, None, cfg=CFG, threshold=0.2, sets=sets,
-        restrict_sets=True).collect()}
-    assert base == restricted and base, "plan choice must not change results"
-
-
 def test_minhash_collapse_identical_bit_identical(docs, corpus_texts):
     """VERDICT r4 #4: collapse_identical pre-collapses identical-shingle-set
     docs before banding.  The fixture corpus plants exact duplicates (base/
@@ -315,7 +294,7 @@ def test_minhash_collapse_identical_bit_identical(docs, corpus_texts):
     def rowset(frame):
         return {tuple(r) for r in frame.collect()}
 
-    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold, skew_mode="salt")
+    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold)
     base, _ = minhash_lsh.minhash_edges(docs, **kw)
     coll, _ = minhash_lsh.minhash_edges(docs, collapse_identical=True, **kw)
     assert base.columns == coll.columns
@@ -355,7 +334,7 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
     for conf in (0.3, 0.95):
         got = _pairset(jaccard_verify(
             pairs.select("a", "b"), None, cfg=CFG, threshold=conf,
-            sets=sigs.select("id", "shingles"), restrict_sets=True))
+            sets=sigs.select("id", "shingles")))
         exp = exp_sim & oracle.jaccard_pairs(corpus_texts, conf, CFG)
         assert got == exp, (conf, len(got), len(exp))
     # non-vacuous: the high confirmation actually drops some true
@@ -369,7 +348,7 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
         None, cfg=CFG, sigs=sigs.select("id", "simhash"))
     conf_edges = _pairset(jaccard_verify(
         e.select("a", "b"), None, cfg=CFG, threshold=0.3,
-        sets=sigs.select("id", "shingles"), restrict_sets=True))
+        sets=sigs.select("id", "shingles")))
     full = exp_sim & oracle.jaccard_pairs(corpus_texts, 0.3, CFG)
     assert conf_edges <= full, "confirmed edge admits an unconfirmed pair"
 
@@ -423,10 +402,9 @@ def test_minhash_empty_docs_never_pair(spark):
     for kw in (dict(),  # exact-verify mode
                dict(est_prefilter=0.2, fast_accept=0.6)):  # production mode
         base, _ = minhash_lsh.minhash_edges(
-            docs, cfg=CFG, threshold=0.3, skew_mode="salt", **kw)
+            docs, cfg=CFG, threshold=0.3, **kw)
         coll, _ = minhash_lsh.minhash_edges(
-            docs, cfg=CFG, threshold=0.3, skew_mode="salt",
-            collapse_identical=True, **kw)
+            docs, cfg=CFG, threshold=0.3, collapse_identical=True, **kw)
         b, c = rowset(base), rowset(coll)
         assert b == c, (kw, b ^ c)
         ids = {x for r in b for x in (r[0], r[1])}
@@ -442,7 +420,7 @@ def test_minhash_precomputed_cands_identical(spark):
     empty/whitespace docs (whose sentinel signatures band-collide in the raw
     frame but are anti-joined out; band collisions are pairwise, so no other
     pair is affected)."""
-    from webdedup.functions.signatures import minhash_shingle_sets
+    from webdedup.functions.signatures import all_signatures
 
     rows = [("e1", ""), ("e2", "   \n\t "),
             ("a1", "the quick brown fox jumps over the lazy dog again and "
@@ -452,7 +430,8 @@ def test_minhash_precomputed_cands_identical(spark):
             ("b1", "completely unrelated text about spark catalyst plans "
                    "and shuffle partitions in a distributed engine")]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    fused = minhash_shingle_sets(docs, CFG).localCheckpoint()
+    fused = all_signatures(
+        docs, CFG, kinds=("minhash", "shingles")).localCheckpoint()
     sigs = fused.select("id", "minhash")
     sets = fused.select("id", "shingles")
     cands = minhash_lsh.minhash_candidates(

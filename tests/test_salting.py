@@ -24,20 +24,6 @@ def test_salted_equals_unsalted_with_hot_bucket(spark):
         assert salted == exact, f"hot_threshold={hot_threshold}"
 
 
-def test_simhash_edges_salt_mode_components(docs, corpus_texts):
-    """salt-mode edges yield the same components as brute-force simhash."""
-    from webdedup import oracle
-    e_salt, overflow = simhash_lsh.simhash_edges(
-        docs, cfg=CFG, scheme="combo", skew_mode="salt")
-    assert overflow.count() == 0
-    clone_plus_rep = {(r["a"], r["b"]) for r in e_salt.collect()}
-    exp = oracle.simhash_pairs(corpus_texts, CFG)
-    ids = sorted(corpus_texts)
-    got_comp = oracle.union_find_clusters(ids, clone_plus_rep)
-    exp_comp = oracle.union_find_clusters(ids, exp)
-    assert got_comp == exp_comp
-
-
 def test_blocked_verify_equals_join_verify(spark):
     """blocked_hamming_pairs (the r6 1M-cliff fix, simhash_edges default)
     must be BIT-IDENTICAL to the join-shaped verify — including hot

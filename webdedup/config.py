@@ -81,9 +81,9 @@ class DedupConfig:
     hyperplane_probe_bits: int = 2
 
     # --- skew / scale controls ---
-    max_bucket_size: int = 200    # cap: quarantine LSH buckets larger than this
-                                  # (analog of reference max_candidates,
-                                  #  simhash.cpp:243-245)
+    max_bucket_size: int = 200    # MinHash bands larger than this are salted;
+                                  # shingle/anchor df cap (the reference caps
+                                  # candidates instead, simhash.cpp:243-245)
     salt_factor: int = 8          # salt hot keys into this many sub-keys
 
     # --- connected components ---

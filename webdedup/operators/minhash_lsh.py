@@ -4,10 +4,11 @@ Reference semantics: ``datasketch.MinHash(num_perm=128)`` +
 ``MinHashLSH(threshold=0.3)`` (``minhash_search.py:12-40``), candidates from
 ``lsh.query`` (banding), re-ranked by signature Jaccard (``:81-83``).
 
-Graft shape (SURVEY §2.3 J4): 128-perm signature column from an Arrow UDF,
-``posexplode`` into b=32 bands x r=4 rows, band-hash equi-join for
-candidates, then *exact* shingle-set Jaccard as the verify step (stronger
-than the reference's signature-estimate re-rank).  The banded probability of
+Graft shape (SURVEY §2.3 J4): 128-perm signature column from the signature
+kernel (``functions.signatures.all_signatures``), sliced into b=32 bands x
+r=4 rows, band-hash equi-join for candidates, then *exact* shingle-set
+Jaccard as the verify step (stronger than the reference's
+signature-estimate re-rank).  The banded probability of
 catching a pair with Jaccard J is 1-(1-J^r)^b: ~0.974 at J=0.3,
 1 - 5e-8 at J=0.8 — so at the fixture similarity levels recall is ~1.0
 while the oracle-exact path (``webdedup.operators.jaccard``) covers the
@@ -22,23 +23,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig, DEFAULT
-from webdedup.functions.signatures import minhash_col
+from webdedup.functions.signatures import signature_view
 from webdedup.operators.jaccard import jaccard_verify
-from webdedup.operators.simhash_lsh import cap_buckets
+from webdedup.operators.simhash_lsh import salted_band_candidates
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
                        cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """(id, minhash: array<long>[128]) — one Arrow-batched UDF projection.
-
-    Input re-expanded when under-partitioned (r7), so the per-shingle md5
-    pass — this operator's floor — parallelizes even when the source scan
-    arrives as 1-2 partitions; a no-op at scale (plans.partitions)."""
-    from webdedup.plans.partitions import ensure_min_partitions
-    df = ensure_min_partitions(df.select(id_col, text_col))
-    return df.select(F.col(id_col).alias("id"),
-                     minhash_col(F.col(text_col), cfg).alias("minhash"))
+    """(id, minhash: array<long>[128]) — the ``minhash`` view of the
+    signature kernel."""
+    return signature_view(df, cfg, id_col, text_col, ("minhash",))
 
 
 def minhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
@@ -114,7 +109,6 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                   threshold: float | None = None,
                   sigs: DataFrame | None = None,
                   sets: DataFrame | None = None,
-                  skew_mode: str = "salt",
                   est_prefilter: float | None = None,
                   fast_accept: float | None = None,
                   collapse_identical: bool = False,
@@ -123,28 +117,29 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     """(pairs, overflow_quarantine): banded LSH candidates verified by EXACT
     shingle Jaccard >= threshold — the MinHash twin of ``simhash_edges``.
 
-    ``skew_mode``: 'salt' (default) spreads hot bands losslessly (overflow
-    frame is empty); 'cap' keeps ``cfg.max_bucket_size`` members per bucket
-    and RETURNS the quarantined band rows (never silently dropped —
-    north_rule: no silent caps); None disables skew handling.
+    Candidates are ``cands`` when supplied, else ``salted_band_candidates``
+    over the bands: adaptive (one probe; hot bands are salted only when
+    some bucket exceeds ``cfg.max_bucket_size``) and lossless, so the
+    overflow frame is always empty — it keeps the ``*_bucket_overflow``
+    stage table's shape.
 
     ``est_prefilter``: optional signature-estimate Jaccard cutoff applied
-    BEFORE the exact exploded-shingle verify — the reference's re-rank
-    metric (``minhash_search.py:81-83``) as a cheap Catalyst zip_with over
-    the already-loaded signatures.  The estimator is unbiased with
+    BEFORE the exact verify — the reference's re-rank metric
+    (``minhash_search.py:81-83``) as the Arrow kernel ``signature_jaccard``
+    over the already-loaded signatures.  The estimator is unbiased with
     std ≈ sqrt(J(1-J)/128) ≈ 0.04, so a cutoff 3σ under the verify
     threshold (e.g. 0.35 for threshold 0.5) discards the bulk of the
     false-candidate mass without touching real pairs; the pipeline's golden
     recall gate (>= 0.99) pytest-covers the safety margin.
 
     ``fast_accept``: optional signature-estimate cutoff ABOVE which a
-    candidate pair is accepted without the exact exploded-shingle verify —
-    the stratified-verify mode for the pipeline's edge sets.  The estimator
+    candidate pair is accepted without the exact verify — the
+    stratified-verify mode for the pipeline's edge sets.  The estimator
     is unbiased with std sqrt(J(1-J)/perms) (~0.044 at J=0.5 with 128
     perms), so a cutoff 3σ above the verify threshold accepts only pairs
     whose true Jaccard is below threshold with probability <~0.1% each;
     only the uncertainty band [est_prefilter, fast_accept) pays the exact
-    verify, which is where the exploded-join volume goes at scale.
+    verify, which is where the verify volume goes at scale.
     When set, the output gains an ``estimated`` boolean column: accepted
     rows carry the (unbiased, ±1/128-quantized) ESTIMATE in the ``jaccard``
     column and ``estimated=true``; verified rows carry the exact value and
@@ -155,8 +150,8 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     oracle-checked ``minhash_pairs`` path never sets it.
 
     ``sigs``/``sets``: optional materialized signature / shingle-set tables
-    (stage tables in the pipeline) — without them the whole signature UDF
-    subtree is embedded in a self-join plan and executes once per join arm.
+    (stage tables in the pipeline) — without them the whole signature pass
+    is embedded in a self-join plan and executes once per join arm.
 
     ``cands``: optional PRECOMPUTED banded candidate frame (a, b) built over
     the RAW signature table — ``minhash_candidates(minhash_bands(sigs))``,
@@ -167,9 +162,8 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     whether two OTHER documents collide — so restricting the precomputed
     frame to non-sentinel docs (two anti-joins against the tiny empty-doc
     id set) yields EXACTLY the pair set of banding the sentinel-filtered
-    table, by construction on any corpus.  Only supported with
-    ``skew_mode=None`` / ``collapse_identical=False`` (the caller that
-    built the frame already chose its own skew handling).
+    table, by construction on any corpus.  Not supported with
+    ``collapse_identical`` (the frame was banded over every document).
 
     ``collapse_identical``: pre-collapse documents with IDENTICAL shingle
     sets into one representative before banding (VERDICT r4 #4: exact
@@ -185,47 +179,45 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     shingle hashing the operator is already built on).  Output is
     BIT-IDENTICAL to ``collapse_identical=False`` (pytest-pinned both
     modes, including an empty-text doc pair); only the work changes.
-    Unsupported with ``skew_mode='cap'`` (overflow quarantine counts are
-    per-document semantics).  Empty shingle sets never pair in EITHER
-    mode: they are filtered out before banding (sentinel-signature filter
-    below), matching the exact-verify semantics where empty-vs-anything
-    Jaccard is 0 or 0/0 -> NULL and is dropped.
+    Empty shingle sets never pair in EITHER mode: they are filtered out
+    before banding (sentinel-signature filter below), matching the
+    exact-verify semantics where empty-vs-anything Jaccard is 0 or
+    0/0 -> NULL and is dropped.
     """
     t = cfg.minhash_threshold if threshold is None else threshold
     if sigs is None and sets is None and df is not None:
-        # r7: neither stage table supplied — ONE fused pass computes both
+        # r7: neither stage table supplied — ONE kernel pass computes both
         # (tokenization once, one md5 per distinct shingle serving both
-        # hash widths) instead of two full tokenize+md5 passes; values are
-        # bit-identical to the separate operators (signatures doc)
-        from webdedup.functions.signatures import minhash_shingle_sets
-        fused = minhash_shingle_sets(df, cfg, id_col, text_col)
-        fused = fused.localCheckpoint(eager=False)
-        sigs = fused.select("id", "minhash")
-        sets = fused.select("id", "shingles")
+        # hash widths) instead of two full tokenize+md5 passes
+        both = signature_view(df, cfg, id_col, text_col,
+                              ("minhash", "shingles")).localCheckpoint(
+                                  eager=False)
+        sigs = both.select("id", "minhash")
+        sets = both.select("id", "shingles")
     elif sigs is None:
-        # lazy checkpoint: signature UDF would otherwise run once per join arm
+        # lazy checkpoint: the signature pass would otherwise run once per
+        # join arm
         sigs = minhash_signatures(df, id_col, text_col, cfg).localCheckpoint(
             eager=False)
     # Empty-shingle-set docs carry the sentinel signature (MERSENNE61 at
-    # every position — signatures.minhash_udf).  They can never survive the
-    # exact verify (empty vs anything is J = 0 or 0/0 -> NULL, both dropped),
-    # but in fast-accept mode two empty docs band together and would be
-    # accepted at est 1.0 WITHOUT verification — while the collapsed path's
-    # intra-class clique excludes them (its _nonempty filter).  Exclude them
-    # from banding entirely: fixes that divergence (r5 ADVICE), makes both
-    # modes match the exact-verify semantics ("two unrelated empty docs are
-    # not Jaccard-1.0 dups"), and removes the empty-doc mega-bucket a real
-    # crawl would otherwise salt around.  Only degenerate threshold 0.0
-    # could notice (empty-vs-nonempty J=0 pairs — which banding essentially
-    # never surfaces as candidates anyway).
+    # every position — signatures.all_signatures).  They can never survive
+    # the exact verify (empty vs anything is J = 0 or 0/0 -> NULL, both
+    # dropped), but in fast-accept mode two empty docs band together and
+    # would be accepted at est 1.0 WITHOUT verification — while the
+    # collapsed path's intra-class clique excludes them (its _nonempty
+    # filter).  Exclude them from banding entirely: fixes that divergence
+    # (r5 ADVICE), makes both modes match the exact-verify semantics ("two
+    # unrelated empty docs are not Jaccard-1.0 dups"), and removes the
+    # empty-doc mega-bucket a real crawl would otherwise salt around.  Only
+    # degenerate threshold 0.0 could notice (empty-vs-nonempty J=0 pairs —
+    # which banding essentially never surfaces as candidates anyway).
     from webdedup.functions.hashing import MERSENNE61
     sentinel = F.element_at("minhash", 1) == F.lit(MERSENNE61)
     if cands is not None:
-        if collapse_identical or skew_mode is not None:
+        if collapse_identical:
             raise ValueError(
-                "cands (a precomputed banded candidate frame) is only "
-                "supported with skew_mode=None and collapse_identical="
-                "False — the builder of the frame owns skew handling")
+                "cands (a precomputed banded candidate frame) is not "
+                "supported with collapse_identical=True")
         # the frame was banded over the RAW signature table; restrict to
         # non-sentinel docs (see docstring: pairwise collisions make this
         # exactly the filtered-table pair set).  AQE turns these into
@@ -236,29 +228,16 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                  .join(empty_ids.withColumnRenamed("id", "b"), "b", "left_anti"))
     sigs = sigs.filter(~sentinel)
     if collapse_identical:
-        if skew_mode == "cap":
-            raise ValueError(
-                "collapse_identical is lossless only for the lossless skew "
-                "modes; 'cap' quarantine counts are per-document")
         return _collapsed_minhash_edges(
-            df, id_col, text_col, cfg, t, sigs, sets, skew_mode,
-            est_prefilter, fast_accept)
+            df, id_col, text_col, cfg, t, sigs, sets, est_prefilter,
+            fast_accept)
     if cands is not None:
         overflow = minhash_bands(sigs.limit(0), cfg)  # empty, bands-shaped
     else:
         bands = minhash_bands(sigs, cfg)
-        overflow = bands.limit(0)
-        if skew_mode == "salt":
-            from webdedup.operators.simhash_lsh import salted_band_candidates
-            cands = salted_band_candidates(
-                bands, cfg.max_bucket_size, cfg.salt_factor)
-        elif skew_mode == "cap":
-            kept, overflow = cap_buckets(bands, cfg.max_bucket_size)
-            cands = minhash_candidates(kept)
-        elif skew_mode is None:
-            cands = minhash_candidates(bands)
-        else:
-            raise ValueError(skew_mode)
+        overflow = bands.limit(0)  # lossless: nothing quarantined
+        cands = salted_band_candidates(
+            bands, cfg.max_bucket_size, cfg.salt_factor)
     if est_prefilter is not None or fast_accept is not None:
         est = signature_jaccard(cands, sigs)
         if est_prefilter is not None:
@@ -271,10 +250,8 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                                 F.lit(True).alias("estimated")))
             uncertain = (est.filter(F.col("est_jaccard") < fast_accept)
                          .select("a", "b"))
-            # the uncertainty band covers a small fraction of the corpus:
-            # restrict the shingle scan to its ids (jaccard_verify doc)
             verified = jaccard_verify(uncertain, df, id_col, text_col, cfg,
-                                      t, sets=sets, restrict_sets=True
+                                      t, sets=sets
                                       ).withColumn("estimated", F.lit(False))
             return verified.unionByName(accepted), overflow
         cands = est.select("a", "b")
@@ -285,7 +262,6 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
 def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
                              text_col: str, cfg: DedupConfig, t: float,
                              sigs: DataFrame, sets: DataFrame | None,
-                             skew_mode: str | None,
                              est_prefilter: float | None,
                              fast_accept: float | None,
                              ) -> tuple[DataFrame, DataFrame]:
@@ -319,8 +295,7 @@ def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
         df, id_col, text_col, cfg, t,
         sigs=sigs.join(reps_ids, "id", "left_semi"),
         sets=sets.join(reps_ids, "id", "left_semi"),
-        skew_mode=skew_mode, est_prefilter=est_prefilter,
-        fast_accept=fast_accept, collapse_identical=False)
+        est_prefilter=est_prefilter, fast_accept=fast_accept)
 
     value_cols = [c for c in rep_pairs.columns if c not in ("a", "b")]
     ma = members.select(F.col("rep").alias("a"), F.col("id").alias("na"))
@@ -348,21 +323,13 @@ def minhash_pairs(df: DataFrame, id_col: str = "doc_id",
                   threshold: float | None = None,
                   sigs: DataFrame | None = None,
                   sets: DataFrame | None = None,
-                  skew_mode: str | None = None,
                   est_prefilter: float | None = None,
                   collapse_identical: bool = False,
                   cands: DataFrame | None = None) -> DataFrame:
-    """(a, b, jaccard) convenience wrapper over ``minhash_edges`` for the
-    LOSSLESS modes only (``skew_mode`` in {None, 'salt'}).  The lossy 'cap'
-    mode returns a quarantine frame that must not be discarded — call
-    ``minhash_edges`` and handle it (e.g. write a ``*_bucket_overflow``
-    stage table as the pipeline does for SimHash)."""
-    if skew_mode == "cap":
-        raise ValueError(
-            "skew_mode='cap' quarantines candidates; use minhash_edges() "
-            "and persist/report the returned overflow frame")
+    """(a, b, jaccard) convenience wrapper over ``minhash_edges``, whose
+    overflow frame is always empty."""
     pairs, _empty = minhash_edges(
         df, id_col, text_col, cfg, threshold, sigs=sigs, sets=sets,
-        skew_mode=skew_mode, est_prefilter=est_prefilter,
+        est_prefilter=est_prefilter,
         collapse_identical=collapse_identical, cands=cands)
     return pairs

@@ -24,8 +24,10 @@ recall** (SURVEY §2.3 J2):
   than 'single'.  This is the 100 TB path.
 
 Hot buckets (boilerplate pages collapsing to one fingerprint region) are
-handled upstream by fingerprint-dedup (``simhash_edges``) and by the bucket
-cap, the analog of the reference's ``max_candidates`` (``simhash.cpp:243-245``).
+handled upstream by fingerprint-dedup (``simhash_edges``) and by the
+bucket-local verify (``blocked_hamming_pairs``), which bounds per-bucket
+memory without dropping pairs — where the reference caps candidates
+(``max_candidates``, ``simhash.cpp:243-245``) and loses them.
 """
 
 from __future__ import annotations
@@ -36,20 +38,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig, DEFAULT
-from webdedup.functions.signatures import simhash64_col
+from webdedup.functions.signatures import signature_view
 
 
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
-    """(id, simhash:long) — one Arrow-batched UDF projection.
-
-    The input is re-expanded when under-partitioned (r7): a small parquet
-    scan arrives as 1-2 partitions, which would run the tokenize+hash UDF
-    on 1-2 cores; at scale the guard is a no-op (plans.partitions)."""
-    from webdedup.plans.partitions import ensure_min_partitions
-    df = ensure_min_partitions(df.select(id_col, text_col))
-    return df.select(F.col(id_col).alias("id"),
-                     simhash64_col(F.col(text_col)).alias("simhash"))
+                         text_col: str = "text",
+                         cfg: DedupConfig = DEFAULT) -> DataFrame:
+    """(id, simhash:long) — the ``simhash`` view of the signature kernel."""
+    return signature_view(df, cfg, id_col, text_col, ("simhash",))
 
 
 def _block(i: int, width: int) -> str:
@@ -90,28 +86,6 @@ def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT,
         sigs.select("id", "simhash", F.explode(pairs).alias("tb"))
         .select("id", "simhash", "tb.table_id", "tb.band_key")
     )
-
-
-def cap_buckets(bands: DataFrame, max_bucket: int,
-                id_order: str = "id") -> tuple[DataFrame, DataFrame]:
-    """Split the band table into (kept, quarantined-overflow).
-
-    Keeps the first ``max_bucket`` members (by id) of each bucket and routes
-    the rest to a quarantine frame — the distributed analog of the
-    reference's candidate cap (``simhash.cpp:243-245``), but lossless: the
-    overflow is reported, not silently dropped (north_rule: no silent caps).
-    """
-    spark = bands.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # explicit repartition: the band table comes from an explode, whose
-    # size the planner underestimates — without this, AQE can coalesce the
-    # window shuffle to 1 partition and sort the whole table on one core
-    bands = bands.repartition(n_part, "table_id", "band_key")
-    w = Window.partitionBy("table_id", "band_key").orderBy(id_order)
-    ranked = bands.withColumn("_rk", F.row_number().over(w))
-    kept = ranked.filter(F.col("_rk") <= max_bucket).drop("_rk")
-    overflow = ranked.filter(F.col("_rk") > max_bucket).drop("_rk")
-    return kept, overflow
 
 
 def band_candidates(bands: DataFrame) -> DataFrame:
@@ -175,10 +149,8 @@ def blocked_hamming_pairs(bands: DataFrame, threshold: int,
     would invoke Python once per bucket — tens of millions of times at
     web scale; here singleton buckets cost one vectorized boundary scan).
     Per-bucket work is chunked (``chunk_rows`` x ``chunk_cols``) so a
-    pathological mega-bucket is processed in bounded memory on one task;
-    buckets large enough to need MORE than one task should be capped
-    upstream (``cap_buckets``) — at 1M docs the largest rep bucket holds
-    670 rows.
+    pathological mega-bucket is processed in bounded memory on one task
+    — at 1M docs the largest rep bucket holds 670 rows.
 
     Output is canonicalized (a < b) and ``.distinct()`` deduplicates
     across tables on VERIFIED rows only.  Bit-identical to the join
@@ -283,9 +255,10 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     Verification is bucket-local (``blocked_hamming_pairs``, r6): the
     fingerprint rides the band row, so no candidate set and no signature
     join ever materializes.  The signature frame is lazily
-    localCheckpoint-ed: the band explode would otherwise re-run the Arrow
-    UDF under AQE re-planning."""
-    sigs = simhash_fingerprints(df, id_col, text_col).localCheckpoint(eager=False)
+    localCheckpoint-ed: the band explode would otherwise re-run the
+    signature pass under AQE re-planning."""
+    sigs = simhash_fingerprints(df, id_col, text_col, cfg).localCheckpoint(
+        eager=False)
     return blocked_hamming_pairs(simhash_bands(sigs, cfg, scheme),
                                  cfg.hamming_threshold)
 
@@ -293,31 +266,26 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                   text_col: str = "text", cfg: DedupConfig = DEFAULT,
                   scheme: str = "combo",
-                  sigs: DataFrame | None = None,
-                  skew_mode: str = "blocked") -> tuple[DataFrame, DataFrame]:
+                  sigs: DataFrame | None = None
+                  ) -> tuple[DataFrame, DataFrame]:
     """Scale path for the pipeline: returns (edges, overflow_quarantine).
 
     Docs are first collapsed to *distinct fingerprints* (exact clones and
     identical-fingerprint docs form star edges directly — the boilerplate
     hot group contributes ONE representative to the LSH join instead of
-    millions of rows), then LSH runs over fingerprint representatives with
-    bucket capping.  Edge set is equivalent for connected components.
+    millions of rows), then LSH runs over fingerprint representatives and
+    verifies inside each bucket (``blocked_hamming_pairs``: vectorized
+    popcount, bounded memory via chunking).  Edge set is equivalent for
+    connected components.  The verify is lossless, so the overflow frame
+    is always empty; it keeps the ``*_bucket_overflow`` stage table's
+    shape.
 
     ``sigs``: optional materialized (id, simhash) stage table; strongly
-    recommended — it keeps the signature UDF out of the self-join plan.
-
-    ``skew_mode``: 'blocked' (default since r6 — the 1M-doc cliff fix,
-    see ``blocked_hamming_pairs``) verifies inside each bucket with
-    vectorized popcount, lossless, bounded memory via chunking; 'salt'
-    spreads hot buckets over salted sub-keys through the join-shaped
-    verify with NO recall loss; 'cap' keeps only the first
-    ``max_bucket_size`` members per bucket and quarantines the rest
-    (reference-cap semantics).  All three emit the identical edge set on
-    un-capped data (pytest-pinned).
+    recommended — it keeps the signature pass out of the self-join plan.
     """
     if sigs is None:
-        # lazy checkpoint: keep the UDF out of the multi-arm join plan
-        sigs = simhash_fingerprints(df, id_col, text_col).localCheckpoint(
+        # lazy checkpoint: keep the signature pass out of the multi-arm join
+        sigs = simhash_fingerprints(df, id_col, text_col, cfg).localCheckpoint(
             eager=False)
     w = Window.partitionBy("simhash")
     tagged = sigs.withColumn("rep", F.min("id").over(w))
@@ -327,23 +295,9 @@ def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     )
     reps = tagged.filter(F.col("id") == F.col("rep")).select("id", "simhash")
     bands = simhash_bands(reps, cfg, scheme)
-    if skew_mode == "blocked":
-        rep_pairs = blocked_hamming_pairs(
-            bands, cfg.hamming_threshold).select("a", "b")
-        overflow = bands.limit(0)  # lossless: nothing quarantined
-    elif skew_mode == "salt":
-        cands = salted_band_candidates(
-            bands, cfg.max_bucket_size, cfg.salt_factor)
-        overflow = bands.limit(0)  # lossless: nothing quarantined
-        rep_pairs = hamming_verify(cands, reps,
-                                   cfg.hamming_threshold).select("a", "b")
-    elif skew_mode == "cap":
-        kept, overflow = cap_buckets(bands, cfg.max_bucket_size)
-        rep_pairs = hamming_verify(band_candidates(kept), reps,
-                                   cfg.hamming_threshold).select("a", "b")
-    else:
-        raise ValueError(skew_mode)
-    return clone_edges.unionByName(rep_pairs), overflow
+    rep_pairs = blocked_hamming_pairs(
+        bands, cfg.hamming_threshold).select("a", "b")
+    return clone_edges.unionByName(rep_pairs), bands.limit(0)
 
 
 def salted_band_candidates(bands: DataFrame, hot_threshold: int,

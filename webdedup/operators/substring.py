@@ -17,8 +17,10 @@ semantics; the scalable equivalent is **content-defined anchor sampling**
    shared-anchor count (expected one anchor per ``anchor_mod`` positions, so
    ``n_shared >= 2`` evidences a run of ~>= 2*mod+K tokens).
 
-Everything is native Catalyst (sequence/transform/slice + md5 hashing +
-equi-join) — no UDF — and DuckDB-expressible, so this operator is
+The anchors are the ``anchors`` view of the signature kernel
+(``functions.signatures.all_signatures``, md5-derived ``h60`` values); the
+pair join is native Catalyst.  ``oracle.anchor_set`` is the driver-side
+reference and ``oracle_sql`` the DuckDB twin, so this operator is
 oracle-checked exactly.
 """
 
@@ -27,62 +29,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import pandas as pd
-from pyspark.sql.types import ArrayType, LongType
-
 from webdedup.config import DedupConfig, DEFAULT
-from webdedup.functions.hashing import h60_py
-from webdedup.functions.tokenize import shingles_py, tokenize_py
-from webdedup.functions.hashing import h60_col
-from webdedup.functions.tokenize import shingles_col, tokens_col
+from webdedup.functions.signatures import signature_view
 
 
 def anchor_index(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text",
-                 cfg: DedupConfig = DEFAULT,
-                 use_udf: bool = True) -> DataFrame:
-    """(id, anchor) — distinct sampled k-gram fingerprints per doc.
-
-    UDF and Catalyst implementations produce bit-identical anchors (both
-    md5-derived); the UDF is the fast path (see jaccard.shingle_sets)."""
-    if not use_udf:
-        grams = shingles_col(tokens_col(F.col(text_col)), cfg.anchor_tokens)
-        hashes = F.transform(grams, h60_col)
-        sampled = F.array_distinct(
-            F.filter(hashes, lambda h: h % cfg.anchor_mod == 0)
-        )
-        return (
-            df.select(F.col(id_col).alias("id"), sampled.alias("anchors"))
-            .select("id", F.explode("anchors").alias("anchor"))
-        )
-
-    from webdedup.functions.registry import get_tokenizer
-    from webdedup.plans.partitions import ensure_min_partitions
-
-    # the per-16-gram md5 pass is this operator's floor; a small parquet
-    # scan arrives as 1-2 partitions and would run it on 1-2 cores (r7;
-    # no-op at scale — see plans.partitions)
-    df = ensure_min_partitions(df.select(id_col, text_col))
-    K, mod = cfg.anchor_tokens, cfg.anchor_mod
-    tok = get_tokenizer(cfg.tokenizer)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        def anchors(text: str) -> list[int]:
-            seen: dict[int, None] = {}
-            for g in shingles_py(tok(text or ""), K):
-                h = h60_py(g)
-                if h % mod == 0:
-                    seen[h] = None
-            return list(seen)
-
-        return texts.map(anchors)
-
-    return (
-        df.select(F.col(id_col).alias("id"),
-                  _udf(F.col(text_col)).alias("anchors"))
-        .select("id", F.explode("anchors").alias("anchor"))
-    )
+                 cfg: DedupConfig = DEFAULT) -> DataFrame:
+    """(id, anchor) — distinct sampled k-gram fingerprints per doc."""
+    return (signature_view(df, cfg, id_col, text_col, ("anchors",))
+            .select("id", F.explode("anchors").alias("anchor")))
 
 
 def substring_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -108,7 +64,10 @@ def substring_pairs_from_index(idx: DataFrame, min_anchors: int = 2,
         n_part = int(idx.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "32"))
         w = Window.partitionBy("anchor")
-        idx = (idx.repartition(n_part, "anchor")  # see cap_buckets note
+        # explicit repartition: the index comes from an explode, whose size
+        # the planner underestimates — without it AQE can coalesce the
+        # window shuffle to 1 partition and sort it on one core
+        idx = (idx.repartition(n_part, "anchor")
                .withColumn("_df", F.count(F.lit(1)).over(w))
                .filter(F.col("_df") <= max_df).drop("_df"))
     return (

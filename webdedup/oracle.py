@@ -73,15 +73,16 @@ def jaccard_pairs(docs: dict[str, str], threshold: float,
     return out
 
 
+def anchor_set(text: str, cfg: DedupConfig = DEFAULT) -> set[int]:
+    """Sampled k-gram fingerprints of one doc (substring module doc)."""
+    grams = shingles_py(tokenize_py(text), cfg.anchor_tokens)
+    return {h for g in grams if (h := h60_py(g)) % cfg.anchor_mod == 0}
+
+
 def substring_pairs(docs: dict[str, str], cfg: DedupConfig = DEFAULT,
                     min_anchors: int = 2) -> set[Pair]:
     ids = sorted(docs)
-    anchors = []
-    for i in ids:
-        grams = shingles_py(tokenize_py(docs[i]), cfg.anchor_tokens)
-        anchors.append(
-            {h for g in grams if (h := h60_py(g)) % cfg.anchor_mod == 0}
-        )
+    anchors = [anchor_set(docs[i], cfg) for i in ids]
     out: set[Pair] = set()
     for i in range(len(ids)):
         for j in range(i + 1, len(ids)):

@@ -64,7 +64,7 @@ def run(
     bit-identical to the brute-force matcher union (what
     ``tools/verify_drive.py`` asserts).  OPT-IN ``'auto'`` accepts MinHash
     candidates whose signature-estimate Jaccard is >= threshold + 3σ
-    without the exact exploded verify (measured: ~95% of candidates on the
+    without the exact verify (measured: ~95% of candidates on the
     near-dup corpus, verify stage 22.5s -> 7.6s at 4 cores); recall is
     unaffected (the gate stays pytest-covered), precision admits ~3σ-tail
     near-threshold pairs, and the edge frame's ``jaccard`` column then
@@ -95,17 +95,18 @@ def run(
     ``oracle.all_matcher_pairs(simhash_confirm_jaccard=...)``).
 
     ``simhash_confirm_mode``: ``'est'`` (default) confirms with the
-    128-perm SIGNATURE estimate (one ``zip_with`` over the
-    already-materialized minhash column — the same re-rank metric as
-    ``minhash_search.py:81-83``): unbiased, σ = sqrt(J(1-J)/128) ≈ 0.04,
-    so collisions (J ≲ 0.1) and real near-dup edits (J ≳ 0.5) are both
-    >3σ from a 0.3 cutoff — deterministic per corpus, near-free, and the
-    right default at 10^12 docs where the exact confirm would re-shuffle
-    every edge endpoint's shingle set.  ``'exact'`` confirms with exact
-    exploded-shingle Jaccard instead (measured +60 s at 250k/4 cores —
-    the shingle join over every edge endpoint).  Borderline pairs within
-    ±3σ of the cutoff can flip between modes (the pytest contract pins
-    the two modes' agreement outside that band).
+    128-perm SIGNATURE estimate (the Arrow kernel ``signature_jaccard``
+    over the already-materialized minhash column — the same re-rank
+    metric as ``minhash_search.py:81-83``): unbiased,
+    σ = sqrt(J(1-J)/128) ≈ 0.04, so collisions (J ≲ 0.1) and real
+    near-dup edits (J ≳ 0.5) are both >3σ from a 0.3 cutoff —
+    deterministic per corpus, near-free, and the right default at 10^12
+    docs where the exact confirm would re-shuffle every edge endpoint's
+    shingle set.  ``'exact'`` confirms with exact shingle Jaccard
+    (``jaccard_verify``'s pair kernel) instead (measured +60 s at 250k/4
+    cores — the shingle join over every edge endpoint).  Borderline pairs
+    within ±3σ of the cutoff can flip between modes (the pytest contract
+    pins the two modes' agreement outside that band).
     """
     spark = pages.sparkSession
     times: dict[str, float] = {}
@@ -151,7 +152,7 @@ def run(
     )
 
     # 2. ONE fused signature stage table (reference: features .npy / index
-    # files).  Materializing signatures FIRST keeps the Arrow-UDF subtrees
+    # files).  Materializing signatures FIRST keeps the Python-kernel subtrees
     # out of the LSH self-join plans (Spark does not cache common subplans,
     # and AQE defeats exchange reuse); FUSING all four signature kinds into
     # one mapInPandas pass tokenizes each doc once and shares md5 digests
@@ -182,8 +183,7 @@ def run(
                     e = jaccard_verify(
                         e.select("a", "b"), None, cfg=cfg,
                         threshold=simhash_confirm_jaccard,
-                        sets=sigs.select("id", "shingles"),
-                        restrict_sets=True)
+                        sets=sigs.select("id", "shingles"))
                 elif simhash_confirm_mode == "est":
                     # empty-token docs carry the sentinel signature and
                     # would est-score 1.0 against each other (r6 ADVICE:
@@ -210,13 +210,14 @@ def run(
     if "minhash" in matchers:
         def _min():
             # stratified verify around the signature estimate
-            # (minhash_search.py:81-83), a cheap zip_with over signatures
-            # the join already carries.  σ = sqrt(t(1-t)/perms) ≈ 0.044:
+            # (minhash_search.py:81-83), the Arrow kernel
+            # signature_jaccard over signatures the join already carries.
+            # σ = sqrt(t(1-t)/perms) ≈ 0.044:
             # - est < t-3σ        -> discarded (prefilter; false discard of
             #   a true >=t pair is a 3σ event, recall gate pytest-covered)
             # - est >= t+3σ       -> accepted without exact verify (false
             #   accept is a 3σ event; deterministic per corpus)
-            # - otherwise         -> exact exploded-shingle verify, now paid
+            # - otherwise         -> exact pair-kernel verify, now paid
             #   only by the uncertainty band instead of every candidate
             sigma = (cfg.jaccard_threshold
                      * (1 - cfg.jaccard_threshold) / cfg.minhash_perms) ** 0.5
@@ -226,7 +227,7 @@ def run(
                         else minhash_fast_accept)
             e, overflow = minhash_lsh.minhash_edges(
                 docs, cfg=cfg, threshold=cfg.jaccard_threshold,
-                skew_mode="salt", est_prefilter=est_cut,
+                est_prefilter=est_cut,
                 fast_accept=fast_cut,
                 sigs=sigs.select("id", "minhash"),
                 sets=sigs.select("id", "shingles"),

@@ -2,8 +2,9 @@
 
 Pattern: ``readStream`` on a directory of parquet drops (stand-in for
 Kafka/Kinesis in the sandbox) -> extraction + signature projection (the
-same Arrow UDFs as batch — pure per-row projections lift to streams
-unchanged) -> watermarked exact-dup suppression -> append sink.
+same per-document signature function as batch — pure per-row projections
+lift to streams unchanged) -> watermarked exact-dup suppression -> append
+sink.
 
 Near-dup LSH joins and connected components stay BATCH: they are global
 fixpoint computations; the streaming layer's job is to land deduplicated,
@@ -41,7 +42,7 @@ def enrich_stream(pages: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
         pages.withColumn("text", text)
         .drop("html")
         .withColumn("content_sha", F.sha2(F.col("text"), 256))
-        .withColumn("simhash", simhash64_udf(cfg.tokenizer)(F.col("text")))
+        .withColumn("simhash", simhash64_udf(cfg)(F.col("text")))
     )
 
 
