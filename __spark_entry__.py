@@ -387,12 +387,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _median_heuristic(s: SparkSession, d: str) -> DataFrame:
         sigs = simhash_lsh.simhash_fingerprints(_docs(s, d))
         bands = simhash_lsh.simhash_bands(sigs, CFG, scheme="single")
-        cands = simhash_lsh.band_candidates(bands)
-        sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("sig_a"))
-        sb = sigs.select(F.col("id").alias("b"), F.col("simhash").alias("sig_b"))
-        ham = (cands.join(sa, "a").join(sb, "b")
-               .withColumn("hamming",
-                           F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))))
+        # threshold 64: every 64-bit distance passes, no candidate dropped
+        ham = simhash_lsh.hamming_verify(
+            simhash_lsh.band_candidates(bands), sigs, 64)
         # reference auto-threshold: 0.5 * median distance
         # (run_pipeline.py:391-393)
         return ham.agg(

@@ -20,7 +20,10 @@ SF0001 = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="webdedup-tests", cores=8, shuffle_partitions=8)
+    # a 4 GB heap holds the suite; the session's 32 GB default lets the JVM
+    # grow past a 16 GB host's RAM, where the kernel OOM-kills it mid-run
+    s = get_spark(app_name="webdedup-tests", cores=8, shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "4g"})
     yield s
     s.stop()
 

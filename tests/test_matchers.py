@@ -170,20 +170,34 @@ def test_lsh_cosine_blocked_equals_fold(spark):
         assert blocked == fold, (probe, len(blocked), len(fold))
 
 
-def test_lsh_cosine_hot_bucket_grid_split(spark):
-    """Lossless grid split (ADVICE r3 skew hazard): forcing EVERY bucket
-    through the ns x ns sub-task grid (max_bucket_rows far below real
-    bucket sizes) must not change a single pair or cosine — only the task
-    granularity changes."""
+def test_ann_block_rows_does_not_change_pairs(spark, monkeypatch):
+    """Hot buckets are scored in blocks of at most ``block_rows`` rows per
+    side inside the kernel (ADVICE r3 skew hazard): cutting EVERY bucket
+    into 8-row blocks must not change a single pair or cosine, for the
+    LSH, two-level IVF and directional ``ann_topk`` callers — only the
+    block granularity changes."""
     from webdedup.operators import similarity
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     base = {(r["a"], r["b"]): r["cosine"] for r in
             similarity.lsh_cosine_pairs(emb, threshold=0.3, cfg=CFG).collect()}
-    split = {(r["a"], r["b"]): r["cosine"] for r in
+    small = {(r["a"], r["b"]): r["cosine"] for r in
              similarity.lsh_cosine_pairs(
-                 emb, threshold=0.3, cfg=CFG, max_bucket_rows=8).collect()}
-    assert base and split == base, (len(base), len(split))
+                 emb, threshold=0.3, cfg=CFG, block_rows=8).collect()}
+    assert base and small == base, (len(base), len(small))
+
+    def ivf2_and_topk():
+        pairs = {(r["a"], r["b"]): r["cosine"] for r in
+                 similarity.ivf2_cosine_pairs(emb, threshold=0.3).collect()}
+        topk = sorted(tuple(r) for r in similarity.ann_topk(emb).collect())
+        return pairs, topk
+
+    base = ivf2_and_topk()
+    kernel = similarity._blocked_cosine_pairs
+    monkeypatch.setattr(similarity, "_blocked_cosine_pairs",
+                        lambda *a, **k: kernel(*a, **k, block_rows=8))
+    small = ivf2_and_topk()
+    assert base[0] and base[1] and small == base
 
 
 def test_lsh_cosine_zero_norm_and_threshold_contract(spark):

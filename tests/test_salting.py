@@ -27,8 +27,8 @@ def test_salted_equals_unsalted_with_hot_bucket(spark):
 def test_blocked_verify_equals_join_verify(spark):
     """blocked_hamming_pairs (the r6 1M-cliff fix, simhash_edges default)
     must be BIT-IDENTICAL to the join-shaped verify — including hot
-    buckets larger than the numpy chunk sizes (forces the row/col chunk
-    paths and the Arrow-batch carry-over), cross-table dedup, and both
+    buckets larger than the block size (forces multi-block scoring and
+    the Arrow-batch carry-over), cross-table dedup, and both
     long and string id types."""
     import random
 
@@ -56,12 +56,12 @@ def test_blocked_verify_equals_join_verify(spark):
     exp = canon(simhash_lsh.hamming_verify(
         simhash_lsh.band_candidates(bands),
         bands.select("id", "simhash").distinct(), CFG.hamming_threshold))
-    # tiny chunks force multi-chunk row/col iteration inside one bucket;
+    # tiny blocks force multi-block iteration inside one bucket;
     # tiny Arrow batches force the bucket carry-over across batch bounds
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
         got = canon(simhash_lsh.blocked_hamming_pairs(
-            bands, CFG.hamming_threshold, chunk_rows=7, chunk_cols=13))
+            bands, CFG.hamming_threshold, block_rows=7))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        "10000")

@@ -1,16 +1,19 @@
 """ANN scale/skew evidence: lsh_cosine_pairs on a 50k-vector table with a
 REAL hot-bucket workload (5,000 planted near-identical duplicates collapse
-into the same band keys), A/B-ing the lossless hot-bucket grid split
-(round-4 ADVICE fix) against the monolithic-bucket path.
+into the same band keys), run with a chosen ``block_rows`` cap — the
+per-side block size at which ``similarity.blocked_pairs`` cuts a hot
+bucket inside the kernel.
 
-The r3 recording (BENCH.md §ANN-at-25x) predates the grid split; this tool
-re-validates at the same scale that (a) results are identical with the
-split engaged, (b) wall time does not regress, (c) planted recall stays
-1.0 — measured with a semi-join count, never collecting the ~4M pair rows.
+Comparing caps re-validates at the r3 scale (BENCH.md §ANN-at-25x) that
+(a) the pairs are identical whatever the block size, (b) wall time does
+not regress, (c) planted recall stays 1.0 — measured with a semi-join
+count, never collecting the ~4M pair rows.  Expected at the defaults:
+5,001 pairs, planted recall 1.0.
 
 Usage:  python tools/bench_ann_50k.py [cores] [threshold] [probe_bits] [cap]
-One config per invocation (cap = max_bucket_rows; 10000000 disables the
-grid); prints one JSON line.
+One config per invocation (cap = block_rows; a cap above the largest
+bucket, e.g. 10000000, scores every bucket as one block); prints one JSON
+line.
 
 ``--ivf`` (r7) instead benches the IVF family on the same 50k table:
 ``ivf2_cosine_pairs`` through the shared blocked gemm kernel A/B'd against
@@ -26,10 +29,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_BASE, N_DUP, DIM, K = 45_000, 5_000, 64, 24
-CACHE = "/root/repo/.cache/ann_50k.parquet"
+CACHE = os.path.join(REPO, ".cache", "ann_50k.parquet")
 
 
 def ensure_table() -> None:
@@ -98,11 +102,11 @@ def ivf_main() -> None:
         # the r6 shape, reconstructed: candidates materialized through an
         # equi-join + distinct, vectors joined back, per-pair interpreted
         # Catalyst fold (similarity.py @ r6 ivf2_cosine_pairs)
-        assign2 = similarity._ivf2_assign(emb, "vec_id", "embedding",
-                                          k1, k2, np1)
-        probe_arm = (assign2.filter(F.col("rk2") <= np2)
-                     .select(F.col("id").alias("a"), "cid", "cid2"))
-        store = (assign2.filter((F.col("rank") == 1) & (F.col("rk2") == 1))
+        cells = similarity._ivf2_assign(emb, "vec_id", "embedding",
+                                        k1, k2, np1, np2
+                                        ).localCheckpoint(eager=False)
+        probe_arm = cells.select(F.col("id").alias("a"), "cid", "cid2")
+        store = (cells.filter(F.col("ex"))
                  .select(F.col("id").alias("b"), "cid", "cid2"))
         cands = (probe_arm.join(store, ["cid", "cid2"])
                  .select(F.least("a", "b").alias("a"),
@@ -165,13 +169,13 @@ def main() -> None:
     t0 = time.time()
     pairs = similarity.lsh_cosine_pairs(
         emb, threshold=thr, cfg=CFG, probe_bits=probe,
-        max_bucket_rows=cap).localCheckpoint(eager=False)
+        block_rows=cap).localCheckpoint(eager=False)
     n = pairs.count()
     wall = round(time.time() - t0, 1)
     hit = pairs.join(planted, ["a", "b"], "left_semi").count()
     print(json.dumps({"metric": "ann50k_lsh", "cores": cores,
                       "threshold": thr, "probe_bits": probe,
-                      "max_bucket_rows": cap, "wall_sec": wall,
+                      "block_rows": cap, "wall_sec": wall,
                       "pairs": n,
                       "planted_recall": round(hit / N_DUP, 4)}),
           flush=True)

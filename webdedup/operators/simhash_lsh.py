@@ -25,20 +25,24 @@ recall** (SURVEY §2.3 J2):
 
 Hot buckets (boilerplate pages collapsing to one fingerprint region) are
 handled upstream by fingerprint-dedup (``simhash_edges``) and by the
-bucket-local verify (``blocked_hamming_pairs``), which bounds per-bucket
-memory without dropping pairs — where the reference caps candidates
-(``max_candidates``, ``simhash.cpp:243-245``) and loses them.
+bucket-local verify (``blocked_hamming_pairs``, a popcount scorer over
+``similarity.blocked_pairs``, the kernel the cosine verifies share), which
+scores a big bucket in bounded blocks without dropping pairs — where the
+reference caps candidates (``max_candidates``, ``simhash.cpp:243-245``)
+and loses them.
 """
 
 from __future__ import annotations
 
 from itertools import combinations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig, DEFAULT
 from webdedup.functions.signatures import signature_view
+from webdedup.operators.similarity import blocked_pairs
 
 
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
@@ -123,9 +127,25 @@ def hamming_verify(cands: DataFrame, sigs: DataFrame,
     )
 
 
+def _as_uint64(values: np.ndarray) -> np.ndarray:
+    return values.astype(np.int64).view(np.uint64)
+
+
+def _popcount_at_most(threshold: int):
+    """Block scorer: Hamming distance of every pair with distance <=
+    ``threshold`` (XOR + byte-LUT popcount, ~1e9/s/core)."""
+    lut = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+
+    def score(L: np.ndarray, R: np.ndarray):
+        x = (L[:, None] ^ R[None, :]).view(np.uint8)
+        h = lut[x.reshape(len(L), len(R), 8)].sum(axis=2, dtype=np.uint16)
+        ii, jj = np.nonzero(h <= threshold)
+        return ii, jj, h[ii, jj].astype(np.int32)
+    return score
+
+
 def blocked_hamming_pairs(bands: DataFrame, threshold: int,
-                          chunk_rows: int = 1024,
-                          chunk_cols: int = 4096) -> DataFrame:
+                          block_rows: int = 2048) -> DataFrame:
     """(a, b, hamming): every distinct within-bucket pair with Hamming <=
     threshold — verified INSIDE each bucket with vectorized popcount,
     never materializing the candidate pair set through a shuffle.
@@ -138,109 +158,24 @@ def blocked_hamming_pairs(bands: DataFrame, threshold: int,
     250k docs -> 147.9M at 1M (15.4x for 4x the data); at 1M the stage
     spent 1,400 s mostly sorting/spilling candidate rows.  Verifying
     in-bucket turns those 148M shuffled rows into 148M numpy popcounts
-    (XOR + byte-LUT, ~1e9/s/core) inside one pass over the band table,
-    emitting only the verified pairs (~0.3%% of candidates).
+    inside one pass over the band table, emitting only the verified pairs
+    (~0.3% of candidates).
 
-    Plan shape: repartition + sortWithinPartitions on (table_id,
-    band_key), then ``mapInPandas`` with a carry-over buffer for the
-    bucket that straddles an Arrow-batch boundary — buckets stay
-    contiguous per partition, so each is processed exactly once, and
-    per-group pandas overhead is avoided (a groupBy-``applyInPandas``
-    would invoke Python once per bucket — tens of millions of times at
-    web scale; here singleton buckets cost one vectorized boundary scan).
-    Per-bucket work is chunked (``chunk_rows`` x ``chunk_cols``) so a
-    pathological mega-bucket is processed in bounded memory on one task
-    — at 1M docs the largest rep bucket holds 670 rows.
+    The scan is ``similarity.blocked_pairs`` with every row right-eligible,
+    so each bucket's pairs are scored once, in the upper triangle, in
+    blocks of at most ``block_rows`` rows per side — a pathological
+    mega-bucket runs in bounded memory on one task (at 1M docs the largest
+    rep bucket holds 670 rows).
 
     Output is canonicalized (a < b) and ``.distinct()`` deduplicates
     across tables on VERIFIED rows only.  Bit-identical to the join
     verify (pytest-pinned; the sf0.01 oracle rows check it end-to-end).
     """
-    id_t = dict(bands.dtypes)["id"]
-    out_schema = f"a {id_t}, b {id_t}, hamming int"
-    # no fixed partition count (r7): a hash repartition WITHOUT an explicit
-    # n stays AQE-managed, so the exchange is coalesced to ~1 partition at
-    # bench scale (the 32-task floor dominated this stage on small inputs)
-    # and advisory-sized at production scale — scale-adaptive, not a local
-    # constant (guide §2.2/§2.5; optimization-round rule on parameterised
-    # partitioning)
-    arranged = (bands.select("id", "simhash", "table_id", "band_key")
-                .repartition("table_id", "band_key")
-                .sortWithinPartitions("table_id", "band_key"))
-    thr = int(threshold)
-
-    def verify(batches):
-        import numpy as np
-        import pandas as pd
-
-        lut = np.array([bin(i).count("1") for i in range(256)],
-                       dtype=np.uint8)
-
-        def bucket_pairs(ids, sigs):
-            m = len(sigs)
-            for i0 in range(0, m, chunk_rows):
-                si = sigs[i0:i0 + chunk_rows]
-                for j0 in range(max(i0, 0), m, chunk_cols):
-                    sj = sigs[j0:j0 + chunk_cols]
-                    x = (si[:, None] ^ sj[None, :])
-                    h = lut[x.view(np.uint8).reshape(len(si), len(sj), 8)] \
-                        .sum(axis=2, dtype=np.uint16)
-                    ii, jj = np.nonzero(h <= thr)
-                    gi, gj = ii + i0, jj + j0
-                    keep = gi < gj  # strict upper triangle: self + mirror out
-                    if not keep.any():
-                        continue
-                    gi, gj, hv = gi[keep], gj[keep], h[ii[keep], jj[keep]]
-                    ia, ib = ids[gi], ids[gj]
-                    sw = ib < ia
-                    ia2 = np.where(sw, ib, ia)
-                    ib2 = np.where(sw, ia, ib)
-                    yield ia2, ib2, hv.astype(np.int32)
-
-        def process(region: pd.DataFrame):
-            t = region["table_id"].to_numpy()
-            k = region["band_key"].to_numpy()
-            change = np.empty(len(t), dtype=bool)
-            change[0] = True
-            change[1:] = (t[1:] != t[:-1]) | (k[1:] != k[:-1])
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(t))
-            ids = region["id"].to_numpy()
-            sigs = region["simhash"].to_numpy().astype(np.int64) \
-                .view(np.uint64)
-            outs = []
-            for s, e in zip(starts, ends):
-                if e - s < 2:  # singleton bucket: no pairs
-                    continue
-                for ia, ib, hv in bucket_pairs(ids[s:e], sigs[s:e]):
-                    outs.append((ia, ib, hv))
-            if outs:
-                yield pd.DataFrame({
-                    "a": np.concatenate([o[0] for o in outs]),
-                    "b": np.concatenate([o[1] for o in outs]),
-                    "hamming": np.concatenate([o[2] for o in outs]),
-                })
-
-        pending: pd.DataFrame | None = None
-        for b in batches:
-            df = pd.concat([pending, b]) if pending is not None else b
-            if len(df) == 0:
-                pending = None
-                continue
-            tl = df["table_id"].iat[-1]
-            kl = df["band_key"].iat[-1]
-            tail = ((df["table_id"].to_numpy() == tl)
-                    & (df["band_key"].to_numpy() == kl))
-            if tail.all():  # whole buffer is one bucket — keep accumulating
-                pending = df
-                continue
-            cut = len(df) - int(tail[::-1].argmin())
-            head, pending = df.iloc[:cut], df.iloc[cut:]
-            yield from process(head)
-        if pending is not None and len(pending):
-            yield from process(pending)
-
-    return arranged.mapInPandas(verify, schema=out_schema).distinct()
+    rows = bands.select("id", F.col("simhash").alias("value"),
+                        "table_id", "band_key", F.lit(True).alias("ex"))
+    return blocked_pairs(rows, ["table_id", "band_key"], "hamming int",
+                         _as_uint64, _popcount_at_most(int(threshold)),
+                         block_rows).distinct()
 
 
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",

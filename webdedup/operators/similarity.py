@@ -11,7 +11,12 @@ Spark-first shapes:
   oracle-checked baseline — O(n^2) but exact.
 - LSH-bucketed: seeded random-hyperplane signature (``vector_simhash_udf``)
   -> bucket by signature prefix bands -> cosine only within buckets.  The
-  scale path: candidate volume drops by ~2^bits/band factor.
+  scale path: candidate volume drops by ~2^bits/band factor.  The IVF
+  indexes bucket by quantizer cell instead.
+- ``blocked_pairs``: the one bucket-local pair kernel.  Every ANN verify
+  and ``simhash_lsh.blocked_hamming_pairs`` run their buckets through it,
+  each with its own block scorer (cosine gemm or Hamming popcount); hot
+  buckets are scored in bounded blocks inside the kernel.
 
 Scores are rounded to 6 decimals (both engines compute in float64; rounding
 removes last-ulp associativity noise from the cross-engine value-hash).
@@ -137,7 +142,7 @@ def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
                      bands: int | None = None,
                      probe_bits: int | None = None,
                      verify: str = "blocked",
-                     max_bucket_rows: int = 2048) -> DataFrame:
+                     block_rows: int = 2048) -> DataFrame:
     """Approximate cosine near-dup pairs: hyperplane signature -> band
     buckets (with multi-probe) -> exact cosine verify.
 
@@ -166,22 +171,20 @@ def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     ``verify`` modes:
 
     - ``'blocked'`` (default, the 100 TB path): vectors ride the band
-      explode and each bucket is verified as ONE numpy matmul inside
-      ``applyInPandas`` — the candidate set is NEVER materialized (no
-      quadratic distinct/shuffle; only survivors leave the bucket).  BLAS
-      does the pair-dots at ~0.5 ns each vs ~3 µs for a per-pair Catalyst
-      array fold.  Multi-probe replication is halved by splitting the probe
+      explode and each bucket is verified by ``blocked_pairs`` — one numpy
+      gemm per block, the candidate set NEVER materialized (no quadratic
+      distinct/shuffle; only survivors leave the bucket).  BLAS does the
+      pair-dots at ~0.5 ns each vs ~3 µs for a per-pair Catalyst array
+      fold.  Multi-probe replication is halved by splitting the probe
       radius across both arms: rows probe masks of weight <= ceil(p/2) and
       additionally serve as right-arm members when weight <= floor(p/2);
       by the hypercube geodesic argument (∃k: d(a,k)<=p1 ∧ d(b,k)<=p2 ⟺
       d(a,b) <= p1+p2) this covers EXACTLY Hamming <= probe_bits — 9 keys
       per (vector, band) at probe_bits=2 instead of 37.  Hot buckets
       (boilerplate/near-constant embeddings colliding on one band key) are
-      LOSSLESSLY grid-split: a bucket with more than ``max_bucket_rows``
-      members is partitioned into ceil(n/max)² sub-tasks of bounded size
-      (same pairs, same values — only the task granularity changes), so a
-      single degenerate key can neither OOM one executor nor serialize the
-      stage — the vector-side analog of the text operators' salting.
+      scored in blocks of at most ``block_rows`` rows per side inside the
+      kernel — same pairs, same values, bounded memory — so a single
+      degenerate key cannot OOM an executor, and no probe job runs.
     - ``'fold'``: the round-2 plan — ids-only band join, distinct (a, b),
       vectors joined back once per side, cosine as a Catalyst ``aggregate``
       fold.  Kept as the pure-Catalyst reference; same output bit-for-bit.
@@ -203,12 +206,23 @@ def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     sig = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
                     vector_simhash_udf(cfg)(F.col(vec_col)).alias("sig"))
     if verify == "blocked":
-        # lazy checkpoint: the UDF subtree is shared by the hot-bucket count
-        # arm and the data arm of the grid split
-        sig = sig.localCheckpoint(eager=False)
-        return _lsh_blocked_verify(sig, df.schema[id_col].dataType,
-                                   threshold, bands, width, probe_bits,
-                                   max_bucket_rows)
+        # every row probes the masks of weight <= ceil(p/2); ``ex`` marks
+        # the masks of weight <= floor(p/2) (right-arm eligible)
+        p_right = probe_bits // 2
+        structs = []
+        for t in range(bands):
+            key = (F.shiftrightunsigned(F.col("sig"), t * width)
+                   .bitwiseAND(F.lit((1 << width) - 1)))
+            for m in _probe_masks(width, (probe_bits + 1) // 2):
+                structs.append(F.struct(
+                    F.lit(t).alias("band_id"),
+                    key.bitwiseXOR(F.lit(m)).alias("band_key"),
+                    F.lit(bin(m).count("1") <= p_right).alias("ex")))
+        rows = (sig.select("id", F.col("vec").alias("value"),
+                           F.explode(F.array(*structs)).alias("tb"))
+                .select("id", "value", "tb.band_id", "tb.band_key", "tb.ex"))
+        return _blocked_cosine_pairs(rows, ["band_id", "band_key"],
+                                     threshold, block_rows=block_rows)
     if verify != "fold":
         raise ValueError(verify)
 
@@ -252,147 +266,96 @@ def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     )
 
 
-def _blocked_cosine_pairs(rows: DataFrame, key_cols: list[str], id_type,
-                          threshold: float | None,
-                          max_bucket_rows: int = 2048,
-                          directional: bool = False) -> DataFrame:
-    """Bucket-local gemm cosine verify shared by the LSH and IVF-family
-    ANN paths (r7: one kernel for ``lsh_cosine_pairs``, ``ivf_cosine_pairs``,
-    ``ivf2_cosine_pairs``, ``ann_topk``).
+def blocked_pairs(rows: DataFrame, key_cols: list[str], out_col: str,
+                  prep, score, block_rows: int = 2048,
+                  directional: bool = False) -> DataFrame:
+    """(a, b, <out_col>): the bucket-local pair kernel behind every blocked
+    verify — Hamming (``simhash_lsh.blocked_hamming_pairs``) and cosine
+    (``lsh_cosine_pairs``, ``ivf_cosine_pairs``, ``ivf2_cosine_pairs``,
+    ``ann_topk``).  Candidate pairs never materialize: only scored
+    survivors leave a bucket.
 
-    ``rows`` carries (id, vec, *key_cols, ex): every row is LEFT-eligible
-    in its bucket (= one ``key_cols`` group); ``ex`` marks RIGHT-eligible
-    rows.  A candidate pair is any (left, right) sharing a bucket.  Inside
-    a bucket ONE float64 gemm computes all left x right dots; survivors
-    (HALF_UP-6dp-rounded cosine >= ``threshold``; everything when
-    ``threshold`` is None) are emitted with the RAW cosine — callers apply
-    ``F.round(..., 6)`` + ``distinct`` (a pair can surface in several
-    buckets with the bitwise-identical raw cosine: the gemm's K-dim
-    summation order is fixed by dim, not by bucket shape).
-    ``directional=True`` keeps (left, right) orientation and only drops
-    self-pairs (the ``ann_topk`` query->neighbor semantics); the default
-    canonicalizes to (min, max).
+    ``rows`` carries (id, value, *key_cols, ex).  A bucket is one
+    ``key_cols`` group; every row is LEFT-eligible and ``ex`` marks
+    RIGHT-eligible rows.  ``prep`` turns a batch's ``value`` column into
+    one numpy array; ``score(L, R)`` scores a left block against a right
+    block and returns (i, j, value) for the pairs it keeps.  ``out_col``
+    is the DDL field of that value (``"hamming int"``).
 
-    Plan shape (r7 — measured 2.7x on the bench embeddings vs the r6
-    groupBy-``applyInPandas``): keys-only narrow aggregate finds oversized
-    buckets (broadcast back — only hot keys travel); cold rows take a
-    zero-HOF single-copy path; hot buckets are LOSSLESSLY grid-split into
-    ns x ns sub-buckets, ns = ceil(n/max): a row in hash-group g serves as
-    LEFT in sub-buckets (g, *) and (if ``ex``) as RIGHT in (*, g), so
-    every (left, right) pair meets in exactly one sub-bucket and per-task
-    memory is bounded by ~2·max rows and a max² cosine block (~32 MB at
-    the 2048 default).  The union is hash-repartitioned on (keys, sl, sr)
-    WITHOUT a fixed partition count (AQE right-sizes the exchange: ~1
-    partition at bench scale, advisory-sized at production scale), sorted
-    within partitions, and verified by a ``mapInPandas`` boundary scan —
-    one Python invocation per Arrow batch instead of one per bucket, the
-    ``blocked_hamming_pairs`` shape.  A bucket straddling an Arrow-batch
-    boundary is carried over, so each bucket is processed exactly once.
+    Each unordered pair is scored once per bucket: right rows against each
+    other in the upper triangle, left-only rows against the right rows.
+    ``directional=True`` scores every (left, right) pair in that
+    orientation instead (the ``ann_topk`` query->neighbor semantics).
+    Self-pairs are dropped; undirected output is canonical (a < b).  A
+    pair found in several buckets comes out once per bucket, so callers
+    ``distinct``.
+
+    A hot bucket is cut into blocks of at most ``block_rows`` rows per
+    side, so per-task memory stays bounded (a ``block_rows``² score
+    matrix, 32 MB of float64 at 2048) with no probe job and no pair lost.
+
+    Plan: repartition + sortWithinPartitions on the keys, without a fixed
+    partition count (AQE sizes the exchange), then one ``mapInPandas``
+    boundary scan — one Python call per Arrow batch, not per bucket.  The
+    bucket straddling a batch boundary is carried into the next batch, so
+    each bucket is processed exactly once.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    id_t = dict(rows.dtypes)["id"]
+    name = out_col.split()[0]
+    arranged = (rows.select("id", "value", *key_cols, "ex")
+                .repartition(*key_cols)
+                .sortWithinPartitions(*key_cols))
+    step = int(block_rows)
 
-    hot = (rows.select(*key_cols)
-           .groupBy(*key_cols)
-           .agg(F.count(F.lit(1)).alias("_n"))
-           .filter(F.col("_n") > max_bucket_rows)
-           .localCheckpoint(eager=False))  # probe action + broadcast reuse
-    # Adaptive skip (r7, the salted_band_candidates pattern): ONE tiny
-    # keys-only agg action decides whether ANY bucket is oversized.  When
-    # none is (the common case), the broadcast join + two-arm union the
-    # grid split needs — 2-3 extra stages whose fixed latency dominated
-    # this operator at bench scale — vanish from the plan entirely; when
-    # data IS skewed the probe cost is noise next to the join it shapes.
-    if hot.isEmpty():
-        gridded = rows.select(
-            "id", "vec", *key_cols,
-            F.lit(0).alias("sl"), F.lit(0).alias("sr"),
-            F.lit(True).alias("lft"), F.col("ex").alias("rgt"))
-    else:
-        tagged = rows.join(F.broadcast(hot), key_cols, "left")
-        # cold rows: single copy via plain literal columns — no
-        # interpreted array HOFs on the bulk of the data (guide §4.1)
-        cold = (tagged.filter(F.col("_n").isNull())
-                .select("id", "vec", *key_cols,
-                        F.lit(0).alias("sl"), F.lit(0).alias("sr"),
-                        F.lit(True).alias("lft"), F.col("ex").alias("rgt")))
-        ns = F.ceil(F.col("_n") / max_bucket_rows).cast("int")
-        g = F.pmod(F.xxhash64(F.col("id")), ns).cast("int")
-        seq = F.sequence(F.lit(0), ns - 1)
-        copies = F.concat(
-            # left copies: sub-buckets (g, j); the (g, g) cell doubles as
-            # this row's right-arm slot so it is emitted once in both roles
-            F.transform(seq, lambda j: F.struct(
-                g.alias("sl"), j.alias("sr"), F.lit(True).alias("lft"),
-                (F.col("ex") & (j == g)).alias("rgt"))),
-            # right-only copies: sub-buckets (i, g), i != g
-            F.filter(
-                F.transform(seq, lambda i: F.struct(
-                    i.alias("sl"), g.alias("sr"), F.lit(False).alias("lft"),
-                    F.col("ex").alias("rgt"))),
-                lambda s: s["rgt"] & (s["sl"] != g)),
-        )
-        hot_rows = (tagged.filter(F.col("_n").isNotNull())
-                    .select("id", "vec", *key_cols,
-                            F.explode(copies).alias("s"))
-                    .select("id", "vec", *key_cols,
-                            "s.sl", "s.sr", "s.lft", "s.rgt"))
-        gridded = cold.unionByName(hot_rows)
-    gkeys = [*key_cols, "sl", "sr"]
-    arranged = gridded.repartition(*gkeys).sortWithinPartitions(*gkeys)
-    out_schema = StructType([StructField("a", id_type),
-                             StructField("b", id_type),
-                             StructField("cosine", DoubleType())])
-    thr = None if threshold is None else float(threshold)
-    dr = bool(directional)
+    def blocks(V, li, ri, tri):
+        # (left pos, right pos, value); ``tri``: li is ri, keep i < j
+        for i0 in range(0, len(li), step):
+            L = V[li[i0:i0 + step]]
+            for j0 in range(i0 if tri else 0, len(ri), step):
+                ii, jj, val = score(L, V[ri[j0:j0 + step]])
+                if tri and i0 == j0:
+                    keep = ii < jj
+                    ii, jj, val = ii[keep], jj[keep], val[keep]
+                yield li[i0 + ii], ri[j0 + jj], val
 
-    def verify(batches):
-        def process(region: pd.DataFrame):
-            n = len(region)
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            for c in gkeys:
-                kcol = region[c].to_numpy()
-                change[1:] |= kcol[1:] != kcol[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], n)
-            ids = region["id"].to_numpy()
-            vecs = region["vec"].to_numpy()
-            lft = region["lft"].to_numpy()
-            rgt = region["rgt"].to_numpy()
-            outs = []
-            for s, e in zip(starts, ends):
-                lm, rm = lft[s:e], rgt[s:e]
-                if e - s < 2 or not rm.any() or not lm.any():
-                    continue
-                X = np.stack(vecs[s:e]).astype(np.float64)
-                nrm = np.sqrt((X * X).sum(axis=1))
-                XL, nl = X[lm], nrm[lm]
-                XR, nr = X[rm], nrm[rm]
-                cos = (XL @ XR.T) / np.outer(nl, nr)
-                if thr is not None:
-                    r6 = np.floor(cos * 1e6 + 0.5) / 1e6  # HALF_UP; thr > 0
-                    il, ir = np.nonzero(r6 >= thr)
-                else:
-                    il, ir = np.nonzero(np.ones(cos.shape, dtype=bool))
-                if not len(il):
-                    continue
-                ida = ids[s:e][lm][il]
-                idb = ids[s:e][rm][ir]
-                keep = ida != idb
-                if not keep.any():
-                    continue
-                ida, idb, raw = ida[keep], idb[keep], cos[il, ir][keep]
-                if dr:
-                    outs.append((ida, idb, raw))
-                else:
-                    outs.append((np.minimum(ida, idb),
-                                 np.maximum(ida, idb), raw))
-            if outs:
-                yield pd.DataFrame({
-                    "a": np.concatenate([o[0] for o in outs]),
-                    "b": np.concatenate([o[1] for o in outs]),
-                    "cosine": np.concatenate([o[2] for o in outs])})
+    def process(region: pd.DataFrame):
+        n = len(region)
+        change = np.zeros(n, dtype=bool)
+        change[0] = True
+        for c in key_cols:
+            k = region[c].to_numpy()
+            change[1:] |= k[1:] != k[:-1]
+        starts = np.flatnonzero(change)
+        ends = np.append(starts[1:], n)
+        ids = region["id"].to_numpy()
+        ex = region["ex"].to_numpy()
+        V = prep(region["value"].to_numpy())
+        outs = []
+        for s, e in zip(starts, ends):
+            if e - s < 2:
+                continue
+            pos = np.arange(s, e)
+            r = pos[ex[s:e]]
+            parts = ([(pos, r, False)] if directional
+                     else [(r, r, True), (pos[~ex[s:e]], r, False)])
+            for li, ri, tri in parts:
+                for pa, pb, val in blocks(V, li, ri, tri):
+                    ia, ib = ids[pa], ids[pb]
+                    keep = ia != ib
+                    if not keep.any():
+                        continue
+                    ia, ib, val = ia[keep], ib[keep], val[keep]
+                    if not directional:
+                        sw = ib < ia
+                        ia, ib = np.where(sw, ib, ia), np.where(sw, ia, ib)
+                    outs.append((ia, ib, val))
+        if outs:
+            yield pd.DataFrame({
+                "a": np.concatenate([o[0] for o in outs]),
+                "b": np.concatenate([o[1] for o in outs]),
+                name: np.concatenate([o[2] for o in outs])})
 
+    def scan(batches):
         pending: pd.DataFrame | None = None
         for b in batches:
             dfb = pd.concat([pending, b]) if pending is not None else b
@@ -400,7 +363,7 @@ def _blocked_cosine_pairs(rows: DataFrame, key_cols: list[str], id_type,
                 pending = None
                 continue
             tail = np.ones(len(dfb), dtype=bool)
-            for c in gkeys:
+            for c in key_cols:
                 tail &= dfb[c].to_numpy() == dfb[c].iat[-1]
             if tail.all():  # whole buffer is one bucket — keep accumulating
                 pending = dfb
@@ -411,36 +374,39 @@ def _blocked_cosine_pairs(rows: DataFrame, key_cols: list[str], id_type,
         if pending is not None and len(pending):
             yield from process(pending)
 
-    return arranged.mapInPandas(verify, schema=out_schema)
+    return arranged.mapInPandas(scan, schema=f"a {id_t}, b {id_t}, {out_col}")
 
 
-def _lsh_blocked_verify(sig: DataFrame, id_type, threshold: float,
-                        bands: int, width: int, probe_bits: int,
-                        max_bucket_rows: int = 2048) -> DataFrame:
-    """Per-bucket matmul verify for ``lsh_cosine_pairs`` (see its docstring).
+def _stack_float64(values: np.ndarray) -> np.ndarray:
+    return np.stack(values).astype(np.float64)
 
-    Bucket rows carry (id, vec, ex): every row probes the masks of weight
-    <= ceil(probe/2); ``ex`` marks rows whose mask weight <= floor(probe/2)
-    (right-arm eligible).  The verify itself is the shared
-    ``_blocked_cosine_pairs`` kernel (hot buckets grid-split losslessly,
-    cold rows zero-HOF, sorted ``mapInPandas`` boundary scan).
-    """
-    p_left = (probe_bits + 1) // 2
-    p_right = probe_bits // 2
-    masks = _probe_masks(width, p_left)
-    structs = []
-    for t in range(bands):
-        key = (F.shiftrightunsigned(F.col("sig"), t * width)
-               .bitwiseAND(F.lit((1 << width) - 1)))
-        for m in masks:
-            structs.append(F.struct(
-                F.lit(t).alias("band_id"),
-                key.bitwiseXOR(F.lit(m)).alias("band_key"),
-                F.lit(bin(m).count("1") <= p_right).alias("ex")))
-    exploded = (sig.select("id", "vec", F.explode(F.array(*structs)).alias("tb"))
-                .select("id", "vec", "tb.band_id", "tb.band_key", "tb.ex"))
-    return (_blocked_cosine_pairs(exploded, ["band_id", "band_key"], id_type,
-                                  threshold, max_bucket_rows)
+
+def _cosine_at_least(threshold: float | None):
+    """Block scorer: raw cosine of every pair whose HALF_UP-6dp-rounded
+    cosine is >= ``threshold`` (> 0); every pair when it is None."""
+    def score(L: np.ndarray, R: np.ndarray):
+        nl = np.sqrt((L * L).sum(axis=1))
+        nr = np.sqrt((R * R).sum(axis=1))
+        cos = (L @ R.T) / np.outer(nl, nr)
+        if threshold is None:
+            ii, jj = np.nonzero(np.ones(cos.shape, dtype=bool))
+        else:
+            ii, jj = np.nonzero(np.floor(cos * 1e6 + 0.5) / 1e6 >= threshold)
+        return ii, jj, cos[ii, jj]
+    return score
+
+
+def _blocked_cosine_pairs(rows: DataFrame, key_cols: list[str],
+                          threshold: float | None,
+                          directional: bool = False,
+                          block_rows: int = 2048) -> DataFrame:
+    """(a, b, cosine) distinct, cosine rounded to 6dp: ``blocked_pairs``
+    with one float64 gemm per block.  A ``threshold`` <= 0 or None keeps
+    every pair (the numpy HALF_UP pre-round equals Spark's ``round`` only
+    for positive cosines, so callers filter those themselves)."""
+    thr = float(threshold) if threshold is not None and threshold > 0 else None
+    return (blocked_pairs(rows, key_cols, "cosine double", _stack_float64,
+                          _cosine_at_least(thr), block_rows, directional)
             .withColumn("cosine", F.round("cosine", 6))
             .distinct())
 
@@ -576,14 +542,16 @@ def ivf_assignments(df: DataFrame, id_col: str = "vec_id",
 
 
 def _ivf2_assign(df: DataFrame, id_col: str, vec_col: str,
-                 k1: int, k2: int, nprobe1: int) -> DataFrame:
-    """Shared two-level IVF assignment for ``ivf2_cosine_pairs`` /
-    ``ann_topk``: (id, vec, rank, cid, rk2, cid2) — each vector's
-    ``nprobe1`` level-1 lists, sub-centroid ranks within each.
+                 k1: int, k2: int, nprobe1: int, nprobe2: int) -> DataFrame:
+    """Shared two-level IVF buckets for ``ivf2_cosine_pairs`` /
+    ``ann_topk``: (id, value, cid, cid2, ex) — one row per probed
+    (cid, cid2) cell: each vector's ``nprobe1`` level-1 lists and its
+    ``nprobe2`` nearest sub-centroids within each.
 
-    Storage key = the (cid, cid2) with rank=1 ∧ rk2=1; probe keys = every
-    (cid, cid2) with rk2 <= nprobe2 (the caller filters).  Both centroid
-    tables are md5-sampled and broadcast; every rank is (rounded-distance,
+    ``ex`` marks the STORAGE cell (rank=1 ∧ rk2=1 — a subset of the probe
+    rows, since rk2=1 <= nprobe2), so ``blocked_pairs``' (left, right)
+    pairs are exactly probe ∋ storage.  Both centroid tables are
+    md5-sampled and broadcast; every rank is (rounded-distance,
     id)-deterministic, so consumers stay DuckDB-oracle-checkable.
     """
     # level-1: nprobe1 nearest of k1 coarse centroids per vector
@@ -610,9 +578,9 @@ def _ivf2_assign(df: DataFrame, id_col: str, vec_col: str,
               .select("id", "rank", "cid", "cid2", "_d2")
               .withColumn("rk2", F.row_number().over(w2)))
     v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    return (ranked.join(v, "id")
-            .select("id", "vec", "rank", "cid", "cid2", "rk2")
-            .localCheckpoint(eager=False))
+    return (ranked.filter(F.col("rk2") <= nprobe2).join(v, "id")
+            .select("id", F.col("vec").alias("value"), "cid", "cid2",
+                    ((F.col("rank") == 1) & (F.col("rk2") == 1)).alias("ex")))
 
 
 def ivf2_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
@@ -632,9 +600,8 @@ def ivf2_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     ``k2`` md5-sampled sub-centroids WITHIN each level-1 list.  A vector's
     storage key is its (c1, c2) pair; a query probes ``nprobe1`` level-1
     lists and ``nprobe2`` sub-lists within each.  Candidates = probe keys ∋
-    storage keys, verified with exact cosine (``lsh_cosine_pairs`` plan
-    shape: narrow keys through the join, vectors joined back once per
-    side).  Fully deterministic (sampling by md5, ranking by rounded
+    storage keys, verified with exact cosine inside each (c1, c2) cell by
+    ``blocked_pairs``.  Fully deterministic (sampling by md5, ranking by rounded
     distance + id) — hence DuckDB-oracle-checkable, which a stochastic
     graph index never is.
 
@@ -650,23 +617,9 @@ def ivf2_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     at k1=8/k2=4, threshold 0.3: (2,2) ≈ 0.48, (4,4) ≈ 0.88, (6,4) ≈ 0.98,
     and ``nprobe1=k1`` is exact coverage by construction.
     """
-    assign2 = _ivf2_assign(df, id_col, vec_col, k1, k2, nprobe1)
-    # bucket = a probed (cid, cid2) cell; ``ex`` marks the STORAGE rows
-    # (rank=1 ∧ rk2=1 — a subset of the probe rows, since rk2=1 <= nprobe2),
-    # so the kernel's (left, right) pairs are exactly probe ∋ storage.
-    # r7: the candidate equi-join + distinct + two vector joins + per-pair
-    # interpreted ``_dot`` fold (r6 VERDICT "what's wrong" #1) collapse
-    # into the shared blocked gemm kernel — candidates never materialize.
-    rows = (assign2.filter(F.col("rk2") <= nprobe2)
-            .select("id", "vec", "cid", "cid2",
-                    ((F.col("rank") == 1) & (F.col("rk2") == 1)).alias("ex")))
-    pairs = _blocked_cosine_pairs(
-        rows, ["cid", "cid2"], df.schema[id_col].dataType,
-        threshold if threshold > 0 else None)
-    return (pairs.withColumn("cosine", F.round("cosine", 6))
-            .filter(F.col("cosine") >= threshold)
-            .distinct()
-            .select("a", "b", "cosine"))
+    rows = _ivf2_assign(df, id_col, vec_col, k1, k2, nprobe1, nprobe2)
+    return (_blocked_cosine_pairs(rows, ["cid", "cid2"], threshold)
+            .filter(F.col("cosine") >= threshold))
 
 
 def ann_topk(df: DataFrame, id_col: str = "vec_id",
@@ -696,29 +649,23 @@ def ann_topk(df: DataFrame, id_col: str = "vec_id",
     pins this plus monotone recall in (nprobe1, nprobe2).
 
     At 10^12 docs this is the same plan as ``ivf2_cosine_pairs``: two
-    broadcast joins against tiny centroid tables, one equi-join on narrow
-    (cid, cid2) keys, vectors joined back once per side, and a per-query
-    window whose partitions are naturally small (candidate lists, not the
+    broadcast joins against tiny centroid tables, the bucket-local
+    ``blocked_pairs`` scan over (cid, cid2) cells, and a per-query window
+    whose partitions are naturally small (candidate lists, not the
     corpus).
     """
-    assign2 = _ivf2_assign(df, id_col, vec_col, k1, k2, nprobe1)
-    # same bucket/ex construction as ``ivf2_cosine_pairs`` but DIRECTIONAL
-    # (q probing n's cell ranks n for q, not the reverse) and unthresholded:
-    # the kernel emits every (probe, storage) pair with its raw cosine, so
-    # no vector join and no per-pair interpreted ``_dot`` fold remains
-    rows = (assign2.filter(F.col("rk2") <= nprobe2)
-            .select("id", "vec", "cid", "cid2",
-                    ((F.col("rank") == 1) & (F.col("rk2") == 1)).alias("ex")))
-    pairs = _blocked_cosine_pairs(
-        rows, ["cid", "cid2"], df.schema[id_col].dataType,
-        None, directional=True)
+    # same buckets as ``ivf2_cosine_pairs`` but DIRECTIONAL (q probing n's
+    # cell ranks n for q, not the reverse) and unthresholded: the kernel
+    # emits every (probe, storage) pair with its cosine, so no vector join
+    # and no per-pair interpreted ``_dot`` fold remains
+    rows = _ivf2_assign(df, id_col, vec_col, k1, k2, nprobe1, nprobe2)
+    pairs = _blocked_cosine_pairs(rows, ["cid", "cid2"], None,
+                                  directional=True)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
     return (
         pairs.select(F.col("a").alias("query_id"),
                      F.col("b").alias("neighbor_id"), "cosine")
-        .withColumn("cosine", F.round("cosine", 6))
-        .distinct()
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
@@ -733,20 +680,15 @@ def ivf_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     """(a, b, cosine): IVF-pruned exact-cosine pairs — candidates are pairs
     where one side's ``nprobe`` probe lists contain the other side's
     STORAGE list (rank-1 centroid), mirroring a faiss IVF query over every
-    corpus vector.  Verification joins vectors back by id (narrow candidate
-    rows through the dedup, the ``lsh_cosine_pairs`` plan shape).
+    corpus vector.  Each probed list is verified in place by
+    ``blocked_pairs`` (exact cosine, no candidate join).
     ``lloyd_iters`` trains the quantizer (see ``ivf_assignments``)."""
     assign = ivf_assignments(df, id_col, vec_col, k_centroids, nprobe,
                              lloyd_iters)
-    assign = assign.localCheckpoint(eager=False)  # hot-probe + data arms
     # bucket = a probed centroid list; ``ex`` marks STORAGE rows (rank=1,
     # a subset of the probe rows) — kernel pairs are exactly probe ∋ storage
     # (r7: blocked gemm replaces the candidate join + interpreted fold)
-    rows = assign.select("id", "vec", "cid", (F.col("rank") == 1).alias("ex"))
-    pairs = _blocked_cosine_pairs(
-        rows, ["cid"], df.schema[id_col].dataType,
-        threshold if threshold > 0 else None)
-    return (pairs.withColumn("cosine", F.round("cosine", 6))
-            .filter(F.col("cosine") >= threshold)
-            .distinct()
-            .select("a", "b", "cosine"))
+    rows = assign.select("id", F.col("vec").alias("value"), "cid",
+                         (F.col("rank") == 1).alias("ex"))
+    return (_blocked_cosine_pairs(rows, ["cid"], threshold)
+            .filter(F.col("cosine") >= threshold))
